@@ -37,16 +37,27 @@ class HadoopFS:
         path = self._path(p)
         return self.fs.exists(path) and self.fs.getFileStatus(path).isDirectory()
 
-    def list_dirs(self, p: str) -> list[str]:
-        """Names of child directories (e.g. ``epoch=3`` partition dirs)."""
-        path = self._path(p)
-        if not self.fs.exists(path):
-            return []
-        return [
-            st.getPath().getName()
-            for st in self.fs.listStatus(path)
-            if st.isDirectory()
-        ]
+    def list_dirs(self, p: str, only=None) -> list[str]:
+        """Names of child directories (e.g. ``epoch=3`` partition dirs).
+
+        ``only`` keeps the child names in that set, matched by one glob
+        inside the JVM: the driver then pays a py4j round trip per
+        match instead of per child, which on a 128-bucket epoch dir is
+        the difference between ~4 round trips and ~400 for a point
+        read."""
+        if only is None:
+            path = self._path(p)
+            if not self.fs.exists(path):
+                return []
+            statuses = self.fs.listStatus(path)
+        else:
+            only = sorted(only)
+            if not only:
+                return []
+            statuses = self.fs.globStatus(
+                self._path(f"{p}/{{{','.join(only)}}}")) or []
+        return [st.getPath().getName() for st in statuses
+                if st.isDirectory()]
 
     def dir_has_partition_data(self, base: str, prefix: str) -> bool:
         """True when ``base`` holds at least one ``<prefix>N``

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rados_timestore_spark.core import latest_per_key, one_slice_df
+from rados_timestore_spark.session import shuffle_partition_count
 from rados_timestore_spark.store import TimeStore
 
 MUTABLE_BUCKETS = 128  # StoreHelpers.hs:151-154
@@ -109,7 +110,7 @@ def _fold_chain_groups(df: DataFrame, order_cols: tuple,
         # cannot serialize the per-file commit cost of the write
         # stage above (see store.shape_rewrite) — nor the Python
         # fold itself
-        n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        n = shuffle_partition_count(df.sparkSession)
         shuffled = df.repartition(n, *shuffle_cols)
     else:
         shuffled = df.repartition(key_col)
@@ -317,7 +318,7 @@ class MutableKV:
         join) feeding a single-row global reduce — the winning-head
         rule rides ``max_by`` over ``(time, -seq)``, exactly
         :meth:`lookup`'s ordering."""
-        df = (self.store.spark.read.parquet(pdir)
+        df = (self.store._open_points(None, pdir)
               .filter(F.col("kind") == 1)
               .select("address", "time", "seq", "payload"))
         per = df.groupBy("address").agg(
@@ -405,10 +406,8 @@ class MutableKV:
         argmax path keeps the full listing — it is self-consistent by
         construction, and bulk backfill's direct ``part-*`` appends
         are a documented single-writer maintenance verb.)"""
-        reader = self.store.spark.read
-        if folded:
-            reader = reader.option("pathGlobFilter", "part-*")
-        return reader.parquet(pdir)
+        opts = {"pathGlobFilter": "part-*"} if folded else {}
+        return self.store._open_points(None, pdir, **opts)
 
     def enumerate(self) -> DataFrame:
         """All (key, value) pairs at their latest version
@@ -426,10 +425,6 @@ class MutableKV:
         landed yet cannot leak raw rows into a folded read."""
         meta = self.store._read_meta(self.ns)
         pdir = self.store._points_dir(self.ns, meta)
-        if not self.store.fs.is_dir(pdir):
-            return self.store.spark.createDataFrame(
-                [], "address long, time long, payload binary"
-            )
         df = self._read_generation(pdir, meta.kv_folded).filter(
             F.col("kind") == 1)
         out = (df if meta.kv_folded
@@ -997,10 +992,6 @@ class MutableKV:
         # (_read_generation) so an in-flight append cannot leak.
         meta = self.store._read_meta(self.ns)
         pdir = self.store._points_dir(self.ns, meta)
-        if not self.store.fs.is_dir(pdir):
-            return self.store.spark.createDataFrame(
-                [], "key long, time long, payload binary"
-            )
         df = self._read_generation(pdir, meta.kv_folded).filter(
             F.col("kind") == 1)
         out = (df if meta.kv_folded
@@ -1021,8 +1012,6 @@ class MutableKV:
         (:meth:`_read_generation`) so an in-flight append cannot leak."""
         meta = self.store._read_meta(self.ns)
         pdir = self.store._points_dir(self.ns, meta)
-        if not self.store.fs.is_dir(pdir):
-            return self.store.spark.createDataFrame([], "key long, value binary")
         df = (
             self._read_generation(pdir, meta.kv_folded)
             .filter(F.col("kind") == 1)

@@ -75,6 +75,19 @@ def configure_session(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def shuffle_partition_count(spark: SparkSession) -> int:
+    """``spark.sql.shuffle.partitions`` as a task count for the
+    engine's pinned-count repartitions (``store.shape_rewrite``, the KV
+    layout-keyed fold, the IVF bucket writes).  A value that is not an
+    integer (Databricks' ``auto``) falls back to
+    ``defaultParallelism``; numeric values are used as they are."""
+    raw = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        return int(raw)
+    except (TypeError, ValueError):
+        return spark.sparkContext.defaultParallelism
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Make this package importable on executor Python workers.
 

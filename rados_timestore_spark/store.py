@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from rados_timestore_spark import fsutil
 from rados_timestore_spark.core import POINTS_SCHEMA, kind_col, one_slice_df
 from rados_timestore_spark.index import Index
+from rados_timestore_spark.session import shuffle_partition_count
 
 DEFAULT_BUCKETS = 128
 #: Rollover threshold: reference default 4 MiB per bucket object
@@ -1031,34 +1032,75 @@ class TimeStore:
 
     # ------------------------------------------------------------- read
 
+    def _open_points(self, meta: _Meta | None, pdir: str,
+                     kind: int | None = None,
+                     partitions: dict[int, Sequence[int] | None]
+                     | None = None,
+                     **options) -> DataFrame:
+        """Open the points generation ``pdir`` with the pinned points
+        schema (:func:`_scan_schema`): no footer job infers it, a bucket
+        dir with no data file reads as zero rows, and ``epoch``/
+        ``bucket`` are always ``long`` (hive discovery types them by
+        value).
+
+        ``partitions`` maps each epoch a read touches to its bucket set
+        (``None`` = all of the epoch's buckets).  Each touched epoch
+        dir, under ``kind=<kind>/`` on a dual-index namespace, is
+        listed once and only its existing bucket dirs in the set are
+        opened: the ``targetObjs`` read of StoreHelpers.hs:80-104, with
+        no discovery job over untouched dirs.  ``partitions=None``
+        opens the whole tree (``meta`` is then unused).  A missing
+        ``pdir`` or no matching dir gives the empty scan frame;
+        ``options`` go to the reader (``pathGlobFilter``)."""
+        if partitions is None:
+            paths = [pdir] if self.fs.is_dir(pdir) else []
+        else:
+            base = (f"{pdir}/kind={int(kind)}"
+                    if kind is not None and meta.dual else pdir)
+            paths = []
+            for e, buckets in sorted(partitions.items()):
+                edir = f"{base}/epoch={int(e)}"
+                only = (None if buckets is None
+                        else {f"bucket={int(b)}" for b in buckets})
+                paths += [f"{edir}/{name}"
+                          for name in sorted(self.fs.list_dirs(edir, only))
+                          if name.startswith("bucket=")]
+        if not paths:
+            return self.spark.createDataFrame([], _scan_schema())
+        return (self.spark.read.schema(_scan_schema()).options(**options)
+                .option("basePath", pdir).parquet(*paths))
+
     def _scan(self, ns: str, start: int, end: int,
               addresses: Sequence[int] | None,
               kind: int = 0) -> DataFrame:
-        """Pruned scan: partition predicates on (epoch, bucket) mirror
-        ``targetObjs`` (StoreHelpers.hs:80-104), then row-level filter
-        time BETWEEN start AND end — closed interval on both ends,
-        matching ``processSimple`` (Algorithms.hs:204-206).
+        """Pruned scan: only the (epoch, bucket) dirs the range and
+        the addresses hash to are opened (:meth:`_open_points`, the
+        ``targetObjs`` of StoreHelpers.hs:80-104), then row-level
+        filter time BETWEEN start AND end — closed interval on both
+        ends, matching ``processSimple`` (Algorithms.hs:204-206).  The
+        same (epoch, bucket) predicates stay on top as
+        ``PartitionFilters``.
 
         ``kind`` selects which index drives the pruning (dual-index
-        namespaces keep independent per-kind epoch layouts); callers
-        still apply their own ``kind == k`` row filter, which on a
-        dual namespace is itself a partition predicate (kind leads the
-        directory layout) and prunes the other kind's whole tree."""
+        namespaces keep independent per-kind epoch layouts) and, on a
+        dual namespace, which ``kind=`` tree is opened; callers still
+        apply their own ``kind == k`` row filter."""
         meta = self._read_meta(ns)
-        pdir = self._points_dir(ns, meta)
-        if not self.fs.is_dir(pdir):
-            return self.spark.createDataFrame([], _scan_schema())
-        df = self.spark.read.parquet(pdir)
-
         entries = meta.index_for(kind).range_lookup(start, end)
+        # Per-epoch bucket sets (bucket counts may differ by epoch).
+        # Word64 placement semantics, matching place_bucket().
+        per_epoch = {
+            e: None if addresses is None
+            else sorted({((a & -2) % (1 << 64)) % n for a in addresses})
+            for e, n in entries}
+        df = self._open_points(meta, self._points_dir(ns, meta), kind,
+                               per_epoch)
+
         epochs = [e for e, _ in entries]
         pred = F.col("epoch").isin(epochs)
         if addresses is not None:
-            # Per-epoch bucket sets (bucket counts may differ by epoch).
-            # Word64 placement semantics, matching place_bucket().
             addr_pred = None
-            for e, n in entries:
-                buckets = sorted({((a & -2) % (1 << 64)) % n for a in addresses})
+            for e, buckets in per_epoch.items():
                 clause = (F.col("epoch") == e) & F.col("bucket").isin(buckets)
                 addr_pred = clause if addr_pred is None else (addr_pred | clause)
             pred = pred & addr_pred
@@ -1358,9 +1400,9 @@ class TimeStore:
                     for n in self.fs.list_dirs(sdir)
                 ):
                     # all epochs expired: drop the husk (marker files
-                    # only) so the read path's missing-dir branch
-                    # serves the empty store — a file-less parquet dir
-                    # fails schema inference; the next append
+                    # only) so verify's missing-dir branch serves the
+                    # empty store — a file-less parquet dir fails the
+                    # schema inference it runs; the next append
                     # recreates the layout
                     self.fs.delete(pdir, recursive=True)
             if dropped:
@@ -1484,21 +1526,13 @@ class TimeStore:
             # the atomic flip.  Skipping here would force the caller
             # to commit data and fence in two separate writes, exactly
             # the crash window the fence exists to close.
-            df = self.spark.createDataFrame([], _scan_schema())
             prune_partitions = None
-        elif prune_partitions is not None:
-            subs = [f"{pdir}/epoch={int(e)}/bucket={int(b)}"
-                    for e, b in prune_partitions]
-            subs = [d for d in subs if self.fs.is_dir(d)]
-            if subs:
-                # basePath keeps epoch/bucket as partition columns on
-                # the explicit sub-path scan (the _probe_scan shape)
-                df = (self.spark.read.option("basePath", pdir)
-                      .parquet(*subs))
-            else:
-                df = self.spark.createDataFrame([], _scan_schema())
-        else:
-            df = self.spark.read.parquet(pdir)
+        by_epoch = None
+        if prune_partitions is not None:
+            by_epoch = {}
+            for e, b in prune_partitions:
+                by_epoch.setdefault(int(e), set()).add(int(b))
+        df = self._open_points(meta, pdir, partitions=by_epoch)
         if transform is not None:
             df = transform(df)
         next_version = meta.points_version + 1
@@ -2037,7 +2071,7 @@ def shape_rewrite(df: DataFrame, pcols: Sequence[str],
     file counts are unchanged at any N.
     """
     pcols = list(pcols)
-    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    n_part = shuffle_partition_count(df.sparkSession)
     if target_partitions_per_bucket <= 1:
         out = df.repartition(n_part, *pcols)
     else:

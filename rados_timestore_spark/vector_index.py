@@ -67,6 +67,7 @@ from rados_timestore_spark.core import one_slice_df
 from rados_timestore_spark.fsutil import (
     ConcurrentMaintainerError, HadoopFS, flip_lock,
 )
+from rados_timestore_spark.session import shuffle_partition_count
 
 _META = "_vidx_meta.json"
 _PQ_MARKER = "_pq_meta.json"
@@ -103,8 +104,8 @@ def _bucket_shaped(df: DataFrame) -> DataFrame:
     the cost is per-file; at scale it is a no-op (bucket bytes far
     exceed the advisory size, so AQE would not have coalesced) and the
     file count stays exactly k at any N."""
-    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return df.repartition(n, "bucket")
+    return df.repartition(shuffle_partition_count(df.sparkSession),
+                          "bucket")
 
 
 def _app_tag(app_id: str) -> str:

@@ -38,8 +38,11 @@ def _strides(total: int, points: int = 5) -> list[int]:
     return sorted(ks)
 
 
-@pytest.mark.slow  # soak/fuzz: excluded from the default run (see pytest.ini)
-def test_store_crash_fuzz_strided(spark, tmp_path):
+def _unified_case(spark, tmp_path):
+    """The unified scenario: ``(make, template root, script, probe)``.
+    Its second fenced merge takes the bucket-pruned rewrite (the view
+    is folded by then), and every probe read opens only the touched
+    (epoch, bucket) dirs."""
     FSC = countdown_fs_class()
     ev = spark.read.parquet(f"{SF}/events.parquet")
     pts = ev.select(
@@ -119,15 +122,23 @@ def test_store_crash_fuzz_strided(spark, tmp_path):
         v2 = store.verify("k_INTERNAL")["ok"]
         return reads, lat, v1, kvs, v2
 
+    return make, tmpl, script, probe
+
+
+def _unified_converges(spark, tmp_path, fuels):
+    """Kill the unified script at each boundary ``fuels(total)`` picks,
+    then replay it whole; every replay must read like the no-crash
+    run."""
+    make, tmpl, script, probe = _unified_case(spark, tmp_path)
     fin = str(tmp_path / "fin")
     shutil.copytree(tmpl, fin)
     dry = make(fin)
     script(dry)
     total = dry.fs.ops
     want = probe(make(fin))
-    assert len(want[0]) > 0 and want[2] and want[4]
+    assert len(want[0]) > 0 and want[2] and want[4] and want[3]
 
-    for fuel in _strides(total):
+    for fuel in fuels(total):
         work = str(tmp_path / f"k{fuel}")
         shutil.copytree(tmpl, work)
         with pytest.raises(SimulatedCrash):
@@ -138,6 +149,17 @@ def test_store_crash_fuzz_strided(spark, tmp_path):
         got = probe(make(work))
         assert got == want, f"fuel={fuel}"
         shutil.rmtree(work, ignore_errors=True)
+
+
+@pytest.mark.slow  # soak/fuzz: excluded from the default run (see pytest.ini)
+def test_store_crash_fuzz_strided(spark, tmp_path):
+    _unified_converges(spark, tmp_path, _strides)
+
+
+def test_store_crash_fuzz_smoke(spark, tmp_path):
+    # Default-run smoke of the strided law: one kill in the middle of
+    # the script, then the whole replay and every probe read.
+    _unified_converges(spark, tmp_path, lambda total: [total // 2])
 
 
 @pytest.mark.slow  # soak/fuzz: excluded from the default run (see pytest.ini)
