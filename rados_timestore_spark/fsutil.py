@@ -702,6 +702,357 @@ def maintain_plan(n: int, parts: int, bound: int, skewed: bool,
     return out if out > parts else None
 
 
+def _app_tag(app_id: str) -> str:
+    """Filesystem-safe stable tag for an ingest lineage id — embedded
+    in per-batch stage names and file prefixes so two lineages' equal
+    batch ids never sweep each other's files.  sha1 is fine here: the
+    tag only needs to separate lineages, not resist an adversary, and
+    12 hex chars keep promoted file names short."""
+    import hashlib
+
+    return hashlib.sha1(app_id.encode("utf-8")).hexdigest()[:12]
+
+
+class IndexKernel:
+    """The crash-and-commit protocol of the persisted ANN indexes
+    (``vector_index.VectorIndex``, ``hnsw.HNSWIndex``): the meta
+    document and its CAS commit, the rename swap, the remnant restore,
+    the relayout roll-forward and the ``append_batch`` fence.  A
+    subclass declares only its on-disk layout, as the class constants
+    below.  Every index verb runs :meth:`_restore_remnants` first and
+    commits through :meth:`_commit_meta` (or, for the relayout verb,
+    :meth:`_commit_relayout`) last.
+
+    Every FS mutation here is a single ``self.fs`` call — never a
+    composite ``HadoopFS`` verb — so a proxy in front of ``fs`` (the
+    crash fuzz's countdown, ``tests/crash_fuzz_harness.py``) sees each
+    rename and delete of a swap as its own kill point."""
+
+    #: meta document under the namespace dir (the commit marker)
+    META: str
+    #: raised by :meth:`meta` on a never-built namespace
+    NOT_BUILT: type
+    #: message label, e.g. ``"vector index"``
+    WHAT: str
+    #: hive partition column of the partitioned dirs (``bucket=N``)
+    PART_COL: str
+    #: namespace subdirs a verb swaps WHOLE (live -> ``.old``)
+    WHOLE_DIRS: tuple
+    #: namespace subdirs whose partitions a verb swaps one by one
+    PART_DIRS: tuple
+    #: the relayout verb (retrain / reshard), its roll-forward marker,
+    #: the subdirs it stages, in swap order, and the suffixes of its
+    #: staging and moved-aside dirs
+    ROLL_VERB: str
+    ROLL_MARKER: str
+    ROLL_DIRS: tuple
+    ROLL_STAGING: str
+    ROLL_PRE: str
+
+    def __init__(self, spark: SparkSession, root: str):
+        self.spark = spark
+        self.root = root.rstrip("/")
+        self.fs = HadoopFS(spark, self.root)
+
+    def _ns_dir(self, ns: str) -> str:
+        return f"{self.root}/{ns}"
+
+    def _lock(self, ns: str) -> str:
+        return f"{self._ns_dir(ns)}/{self.META}.lock"
+
+    def _what(self, ns: str) -> str:
+        return f"{self.WHAT} {ns!r}"
+
+    # ---------------------------------------------------------- meta
+
+    def meta(self, ns: str) -> dict:
+        import json
+
+        path = f"{self._ns_dir(ns)}/{self.META}"
+        if not self.fs.exists(path):
+            raise self.NOT_BUILT(
+                f"{self.WHAT} {ns!r} has no {self.META} under "
+                f"{self.root} — run build() first")
+        return json.loads(self.fs.read_text(path))
+
+    def _write_meta(self, ns: str, doc: dict) -> None:
+        import json
+
+        self.fs.write_text_atomic(
+            f"{self._ns_dir(ns)}/{self.META}", json.dumps(doc))
+
+    def _commit_meta(self, ns: str, doc: dict) -> None:
+        """CAS-fenced meta flip (VERDICT r12 #4, the store's
+        ``_write_meta_cas`` pattern): maintenance verbs on one index
+        are serial BY CONTRACT, and a second concurrent maintainer
+        used to silently lose the first's meta update.  Every verb
+        carries the ``txn`` it READ at entry into its commit;
+        :func:`cas_commit_meta` re-checks it under the flip lock and
+        raises :class:`ConcurrentMaintainerError` on a mismatch.  The
+        lock serializes the re-check->write window itself; the txn CAS
+        is the backstop for interleavings wider than the window — a
+        verb's Spark jobs run for seconds between its entry read and
+        this commit."""
+        cas_commit_meta(self.fs, f"{self._ns_dir(ns)}/{self.META}",
+                        self._lock(ns), what=self._what(ns), doc=doc)
+
+    # ---------------------------------------------------------- swap
+
+    def _swap_dir(self, live: str, staging: str, what: str) -> None:
+        """Replace ``live`` by ``staging``: rename(live -> live.old),
+        rename(staging -> live), delete(live.old).  An absent ``live``
+        (a partition the verb creates, first codebooks) is not moved
+        aside; an absent ``staging`` (a partition that held only
+        deleted rows) makes ``live`` vanish; a failed second rename
+        moves ``.old`` back so the index stays readable, then raises.
+
+        A crash BETWEEN the renames leaves no live dir, only ``.old``:
+        the uncommitted verb rolls back when :meth:`_restore_remnants`
+        renames it back (the replay then re-runs against the pre-crash
+        state).  A crash AFTER the second rename leaves a stale
+        ``.old`` beside the new live dir, which the restore deletes."""
+        old = f"{live}.old"
+        moved = self.fs.exists(live)
+        if moved and not self.fs.rename(live, old):
+            raise IOError(f"{what}: cannot move {live} aside")
+        if self.fs.exists(staging) and not self.fs.rename(staging, live):
+            if moved:
+                self.fs.rename(old, live)
+            raise IOError(f"{what}: cannot promote {staging}")
+        self.fs.delete(old, recursive=True)
+
+    def _swap_parts(self, live: str, staging: str, names,
+                    what: str) -> None:
+        """:meth:`_swap_dir` for each partition dir ``name`` of
+        ``live`` from the same name under ``staging``, then delete the
+        staging.  The swaps are independent metadata ops, so more than
+        four are issued from a small thread pool (serially, 3-4 py4j
+        round trips per partition were ~3 s of a 9 s IVF delete at
+        k=256).  An error propagates and leaves some partitions
+        swapped — the state a mid-loop crash leaves, recovered by the
+        verb's replay and its commit-time recount."""
+        names = list(names)
+
+        def one(name: str) -> None:
+            self._swap_dir(f"{live}/{name}", f"{staging}/{name}", what)
+
+        if len(names) > 4:
+            from concurrent.futures import ThreadPoolExecutor
+
+            with ThreadPoolExecutor(
+                    max_workers=min(16, len(names))) as pool:
+                for _ in pool.map(one, names):
+                    pass
+        else:
+            for name in names:
+                one(name)
+        self.fs.delete(staging, recursive=True)
+
+    # ------------------------------------------------------- restore
+
+    def _restore_remnants(self, ns: str,
+                          sweep_stagings: bool = False) -> None:
+        """Crash recovery; every verb and probe entry calls this
+        BEFORE its entry meta read (a roll-forward commits meta, so a
+        txn read first would fail the verb's own commit, and a probe
+        would serve the torn state as a non-retryable error).
+
+        * Relayout roll-forward: a pending :attr:`ROLL_MARKER`
+          completes under the meta flip lock (:meth:`_roll_forward`).
+          The verb's own completion call and a concurrent probe entry
+          may both see the marker; unserialized they race the
+          non-clobber renames (the loser raised IOError from a pure
+          read path), so one runner completes the whole swap and the
+          other finds the marker gone.
+        * ``sweep_stagings`` (VERB entries only): relayout stagings
+          without a marker belong to a relayout that died before its
+          commit point and are deleted, as are ``.clockprobe.`` files
+          (an :func:`fs_now_ms` probe killed between create and
+          delete).  PROBE entries must not sweep: a LIVE relayout
+          spends its whole staging-build window — minutes at scale —
+          before the marker exists, and probes legitimately run beside
+          the single maintainer.  Verbs are serial with it by
+          contract, so a marker-less staging seen at a verb entry IS
+          orphaned.
+        * ``.old`` remnants of :meth:`_swap_dir`, whole-dir
+          (:attr:`WHOLE_DIRS`) and per partition (:attr:`PART_DIRS`),
+          roll back or are deleted (see :meth:`_swap_dir`), so no
+          reader ever sees a vanished dir.  Before this ran at every
+          entry, a delete replay saw a vanished partition as
+          unaffected (its rows were lost), and a kill inside a
+          compact's whole-dir swap failed every other verb and probe
+          until compact itself was re-run."""
+        nsd = self._ns_dir(ns)
+        if not self.fs.exists(nsd):
+            # never built: nothing to recover, and the listing below
+            # would raise a raw Py4J FileNotFoundException — let the
+            # caller's meta() raise NOT_BUILT (ADVICE r14 #2)
+            return
+        marker = f"{nsd}/{self.ROLL_MARKER}"
+        if self.fs.exists(marker):
+            with flip_lock(self.fs, self._lock(ns), what=self._what(ns)):
+                self._roll_forward(ns, marker)
+        if sweep_stagings:
+            # the roll-forward above consumed any committed staging,
+            # so every relayout staging left here is an orphan
+            orphans = {f"{d}{self.ROLL_STAGING}" for d in self.ROLL_DIRS}
+            for st in self.fs.fs.listStatus(self.fs._path(nsd)):
+                name = st.getPath().getName()
+                if name in orphans or ".clockprobe." in name:
+                    self.fs.delete(f"{nsd}/{name}",
+                                   recursive=name in orphans)
+        for d in self.WHOLE_DIRS:
+            if self.fs.exists(f"{nsd}/{d}.old"):
+                self._heal_old(f"{nsd}/{d}")
+        for d in self.PART_DIRS:
+            for name in self.fs.list_dirs(f"{nsd}/{d}"):
+                if name.endswith(".old") and "=" in name:
+                    self._heal_old(f"{nsd}/{d}/{name[:-len('.old')]}")
+
+    def _heal_old(self, live: str) -> None:
+        """``live.old`` exists: delete it beside a committed ``live``,
+        else roll the uncommitted swap back."""
+        if self.fs.exists(live):
+            self.fs.delete(f"{live}.old", recursive=True)
+        else:
+            self.fs.rename(f"{live}.old", live)
+
+    def _roll_forward(self, ns: str, marker: str) -> None:
+        """Complete a committed relayout's swaps and meta, CALLED WITH
+        THE META FLIP LOCK HELD (see :meth:`_restore_remnants`) — a
+        contender that waited out the lock re-checks the marker and
+        finds it gone.
+
+        The marker holds the full target meta and is written before
+        the first of the relayout's whole-dir swaps, which cannot be
+        made atomic together; every kill between them resumes here.
+        Each :attr:`ROLL_DIRS` dir moves aside to :attr:`ROLL_PRE`,
+        then its :attr:`ROLL_STAGING` dir is promoted; each step is
+        skipped when a previous run already did it.  Swap order is the
+        probe-consistency proof: the first dir carries the build
+        marker that binds the new layout to the target meta, so a
+        probe that re-reads it after listing its files proves its
+        snapshot predates the relayout entirely."""
+        import json
+
+        if not self.fs.exists(marker):
+            return  # the lock's previous holder completed it
+        target = json.loads(self.fs.read_text(marker))
+        for d in self.ROLL_DIRS:
+            base = f"{self._ns_dir(ns)}/{d}"
+            staging = f"{base}{self.ROLL_STAGING}"
+            pre = f"{base}{self.ROLL_PRE}"
+            if self.fs.exists(staging):
+                if self.fs.exists(base) and not self.fs.exists(pre):
+                    if not self.fs.rename(base, pre):
+                        raise IOError(
+                            f"{self.ROLL_VERB}({ns!r}) roll-forward: "
+                            f"cannot move {base} aside")
+                if not self.fs.exists(base):
+                    if not self.fs.rename(staging, base):
+                        raise IOError(
+                            f"{self.ROLL_VERB}({ns!r}) roll-forward: "
+                            f"cannot promote {staging}")
+            if self.fs.exists(pre):
+                self.fs.delete(pre, recursive=True)
+        stored = self.meta(ns)
+        if int(stored.get("version", 0)) < int(target["version"]):
+            # direct fenced write: the flip lock is already held (the
+            # CAS wrapper would self-deadlock), and the marker IS the
+            # commit — this is its tail, not a new commit point
+            target["txn"] = int(stored.get("txn", 0)) + 1
+            self._write_meta(ns, target)
+        self.fs.delete(marker, recursive=False)
+
+    def _commit_relayout(self, ns: str, entry_txn: int,
+                         target: dict) -> dict:
+        """The relayout's COMMIT POINT, once all its stagings are
+        complete: under one flip-lock hold, CAS-check the stored txn
+        against ``entry_txn``, bump it, and write the roll-forward
+        marker carrying ``target``; then run the roll-forward and
+        return the committed meta.
+
+        The bump (ADVICE r14 #1) fences a maintainer verb already past
+        its entry read: without it, that verb could pass
+        :func:`cas_commit_meta` between this commit point and the
+        roll-forward's meta write, and the swaps would silently
+        clobber its changes; with it, its CAS re-check fails loudly.
+        Fence BEFORE marker: a kill between the two writes ABORTS the
+        relayout (marker-less stagings are swept at the next verb
+        entry; one txn number is burned).  The roll-forward's own
+        meta write bumps again, so the index lands at
+        ``entry_txn + 2``."""
+        import json
+
+        with flip_lock(self.fs, self._lock(ns), what=self._what(ns)):
+            stored = self.meta(ns)
+            stored_txn = int(stored.get("txn", 0))
+            if stored_txn != entry_txn:
+                raise ConcurrentMaintainerError(
+                    f"{self._what(ns)}: meta txn advanced {entry_txn} "
+                    f"-> {stored_txn} during {self.ROLL_VERB} "
+                    f"(concurrent maintainer detected); re-run the "
+                    f"verb")
+            fence = dict(stored)
+            fence["txn"] = entry_txn + 1
+            self._write_meta(ns, fence)
+            self.fs.write_text_atomic(
+                f"{self._ns_dir(ns)}/{self.ROLL_MARKER}",
+                json.dumps(target))
+        self._restore_remnants(ns)
+        return self.meta(ns)
+
+    # ------------------------------------------------------- helpers
+
+    def _has_data(self, base: str) -> bool:
+        """True when ``base`` holds a partition with a data file.
+        Deleting every vector leaves partition-less dirs, and a swept
+        crashed attempt leaves data-less ones; raw reads of either
+        throw UNABLE_TO_INFER_SCHEMA, so every read of a live table
+        treats them as the empty index."""
+        return self.fs.dir_has_partition_data(base, f"{self.PART_COL}=")
+
+    @staticmethod
+    def _batch_fence(doc: dict, app_id: str | None) -> int:
+        """Last committed ``append_batch`` id of the lineage — the
+        exactly-once fence of Structured Streaming's foreachBatch
+        (SIGMOD 2018).  ``app_id`` scopes it to one checkpoint lineage
+        (Delta's (txnAppId, txnVersion) pattern, ``batch_fences``):
+        batch ids restart at 0 under a new checkpoint, and the
+        unscoped ``last_batch_id`` fence would silently skip the new
+        lineage's early batches."""
+        if app_id is None:
+            return int(doc.get("last_batch_id", -1))
+        return int(doc.get("batch_fences", {}).get(app_id, -1))
+
+    @staticmethod
+    def _advance_batch_fence(doc: dict, app_id: str | None,
+                             batch_id: int) -> None:
+        """Record ``batch_id`` as committed in ``doc`` (LRU-bounded
+        lineages, rationale at :data:`MAX_FENCE_LINEAGES`)."""
+        if app_id is None:
+            doc["last_batch_id"] = int(batch_id)
+        else:
+            doc["batch_fences"] = bump_fence_lru(
+                dict(doc.get("batch_fences", {})), app_id, int(batch_id))
+
+    @staticmethod
+    def _batch_names(batch_id: int, app_id: str | None) -> tuple:
+        """``(stage suffix, file prefix)`` of one ``append_batch``.
+        Both are lineage-scoped like the fence: two lineages share
+        batch id 0, so an unscoped ``b0-`` sweep deleted the OTHER
+        lineage's committed batch-0 files as crashed-attempt remnants,
+        and an unscoped stage's delete-if-exists clobbered the other's
+        in-flight staging on interleaved replays (r12 review).
+        Unkeyed callers keep the ``.batch_<id>`` / ``b<id>-``
+        shapes."""
+        b = int(batch_id)
+        if app_id is None:
+            return f".batch_{b}", f"b{b}-"
+        tag = _app_tag(app_id)
+        return f".batch_a{tag}_{b}", f"a{tag}b{b}-"
+
+
 class SimulatedCrash(Exception):
     """Raised by :class:`ObjectStoreFS` fault injection — models the
     process dying inside a non-atomic rename window."""

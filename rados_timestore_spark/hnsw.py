@@ -38,6 +38,8 @@ import math
 import numpy as np
 import pandas as pd
 
+from rados_timestore_spark.fsutil import IndexKernel
+
 #: Max out-degree per node on layers > 0; layer 0 allows 2x (the
 #: standard HNSW M / Mmax0 split).
 DEFAULT_M = 8
@@ -276,7 +278,7 @@ _GRAPH_MARKER = "_graph_meta.json"
 _RESHARD_MARKER = "_reshard.json"
 
 
-class HNSWIndex:
+class HNSWIndex(IndexKernel):
     """Build-once / probe-many persisted sharded-HNSW index — the
     graph sibling of :class:`vector_index.VectorIndex`'s IVF layout.
 
@@ -313,108 +315,25 @@ class HNSWIndex:
     #: by the operator's stats() sweep).
     SHARD_BOUND = 1_000_000
 
-    def __init__(self, spark, root: str):
-        from rados_timestore_spark.fsutil import HadoopFS
-
-        self.spark = spark
-        self.root = root.rstrip("/")
-        self.fs = HadoopFS(spark, self.root)
-
-    def _ns_dir(self, ns: str) -> str:
-        return f"{self.root}/{ns}"
+    META = _HNSW_META
+    NOT_BUILT = HNSWIndexNotBuilt
+    WHAT = "hnsw index"
+    PART_COL = "shard"
+    WHOLE_DIRS = ("graph", "vectors")
+    PART_DIRS = ("graph", "vectors")
+    ROLL_VERB = "reshard"
+    ROLL_MARKER = _RESHARD_MARKER
+    #: graph first: its staged ``_GRAPH_MARKER`` binds the new layout
+    #: to the target build_gen (see :meth:`_probe_snapshot`)
+    ROLL_DIRS = ("graph", "vectors")
+    ROLL_STAGING = ".resharding"
+    ROLL_PRE = ".preshard"
 
     def _graph_dir(self, ns: str) -> str:
         return f"{self._ns_dir(ns)}/graph"
 
     def _vectors_dir(self, ns: str) -> str:
         return f"{self._ns_dir(ns)}/vectors"
-
-    def _restore_shard_remnants(self, ns: str,
-                                sweep_stagings: bool = False) -> None:
-        """Crash recovery for the per-shard directory swap (ADVICE
-        r10): the swap is rename(shard=S -> shard=S.old) then
-        rename(staging -> shard=S) then delete(shard=S.old).  A crash
-        BETWEEN the renames leaves no live shard=S — the uncommitted
-        op rolls back by restoring the .old dir (the replayed batch
-        then re-runs against the pre-crash state); a crash AFTER the
-        second rename leaves a stale .old beside the committed new
-        shard — deleted.  Every verb (and the probe path) calls this
-        first, so no reader ever sees a vanished shard.
-
-        ALSO rolls back compact()'s WHOLE-DIR swap window (crash-fuzz
-        finding, r11: only compact's own entry healed it, so a kill
-        between its two renames left every OTHER verb and probe
-        failing on the vanished vectors dir until compact specifically
-        was re-run — VectorIndex._restore_remnants already covered
-        the whole-dir case, this mirrors it).
-
-        ALSO rolls :meth:`reshard` FORWARD (r13): the reshard marker
-        persists the full target meta before the first of reshard's
-        TWO whole-dir swaps, so a kill anywhere between them (or
-        before the meta commit) completes deterministically here —
-        see :data:`_RESHARD_MARKER`.  The roll-forward runs UNDER the
-        meta flip lock: reshard's own completion call and a concurrent
-        probe's entry may both see the marker, and unserialized they
-        race the non-clobber renames (r13 review finding — the loser
-        raised IOError from a pure read path).  The lock makes one
-        runner complete the whole swap; the other re-checks and finds
-        the marker gone.
-
-        ``sweep_stagings`` (VERB entries only): without a marker,
-        leftover ``.resharding`` staging dirs belong to a reshard that
-        died before its commit point and are swept.  PROBE entries
-        must NOT sweep (r13 review finding): a LIVE reshard spends its
-        whole staging-build window — minutes at scale — before the
-        marker exists, and probes legitimately run concurrently with
-        the single maintainer; sweeping would fail every reshard on a
-        serving index.  Verbs are serial with reshard by contract, so
-        a marker-less staging seen at a verb entry IS orphaned.
-        ``.clockprobe.`` remnants (crashed fs_now_ms probes, see
-        fsutil) are swept on the same schedule."""
-        import json
-
-        from rados_timestore_spark.fsutil import flip_lock
-
-        if not self.fs.exists(self._ns_dir(ns)):
-            # never-built namespace: nothing to recover, and the
-            # listStatus sweep below would raise a raw Py4J
-            # FileNotFoundException — let the caller's meta() read
-            # surface HNSWIndexNotBuilt instead (ADVICE r14 #2)
-            return
-        marker_path = f"{self._ns_dir(ns)}/{_RESHARD_MARKER}"
-        if self.fs.exists(marker_path):
-            with flip_lock(self.fs,
-                           f"{self._ns_dir(ns)}/{_HNSW_META}.lock",
-                           what=f"hnsw index {ns!r}"):
-                self._roll_reshard_forward(ns, marker_path)
-        if sweep_stagings and not self.fs.exists(marker_path):
-            for base in (self._graph_dir(ns), self._vectors_dir(ns)):
-                staging = f"{base}.resharding"
-                if self.fs.exists(staging):
-                    # a reshard that died before its marker: nothing
-                    # was swapped, the staging is an orphan
-                    self.fs.delete(staging, recursive=True)
-            for st in self.fs.fs.listStatus(
-                    self.fs._path(self._ns_dir(ns))):
-                name = st.getPath().getName()
-                if ".clockprobe." in name:
-                    self.fs.delete(f"{self._ns_dir(ns)}/{name}",
-                                   recursive=False)
-        for base in (self._graph_dir(ns), self._vectors_dir(ns)):
-            old = f"{base}.old"
-            if self.fs.exists(old):
-                if self.fs.exists(base):
-                    self.fs.delete(old, recursive=True)
-                else:
-                    self.fs.rename(old, base)
-            for name in self.fs.list_dirs(base):
-                if not name.endswith(".old") or "=" not in name:
-                    continue
-                live = f"{base}/{name[:-len('.old')]}"
-                if self.fs.exists(live):
-                    self.fs.delete(f"{base}/{name}", recursive=True)
-                else:
-                    self.fs.rename(f"{base}/{name}", live)
 
     def _check_build_marker(self, ns: str, doc: dict) -> None:
         """Rebuild-crash guard (see :data:`_GRAPH_MARKER`): refuse
@@ -440,81 +359,6 @@ class HNSWIndex:
                 f"the meta expects one — a rebuild crashed after "
                 f"overwriting the graphs and before re-marking them; "
                 f"re-run build() to converge")
-
-    def _roll_reshard_forward(self, ns: str, marker_path: str) -> None:
-        """Complete a committed reshard's swaps + meta, CALLED WITH
-        THE META FLIP LOCK HELD (see _restore_shard_remnants) — only
-        one runner executes this at a time; a contender that waited
-        out the lock re-checks the marker and finds it gone."""
-        import json
-
-        if not self.fs.exists(marker_path):
-            return  # the lock's previous holder completed it
-        target = json.loads(self.fs.read_text(marker_path))
-        for base in (self._graph_dir(ns), self._vectors_dir(ns)):
-            staging, pre = f"{base}.resharding", f"{base}.preshard"
-            if self.fs.exists(staging):
-                if self.fs.exists(base) and not self.fs.exists(pre):
-                    if not self.fs.rename(base, pre):
-                        raise IOError(
-                            f"reshard({ns!r}) roll-forward: cannot "
-                            f"move {base} aside")
-                if not self.fs.exists(base):
-                    if not self.fs.rename(staging, base):
-                        raise IOError(
-                            f"reshard({ns!r}) roll-forward: cannot "
-                            f"promote {staging}")
-            if self.fs.exists(pre):
-                self.fs.delete(pre, recursive=True)
-        stored = self.meta(ns)
-        if int(stored.get("version", 0)) < int(target["version"]):
-            # direct fenced write: the flip lock is already held (the
-            # CAS wrapper would self-deadlock), and the marker IS the
-            # commit — this is its tail, not a new commit point
-            target["txn"] = int(stored.get("txn", 0)) + 1
-            self._write_meta(ns, target)
-        self.fs.delete(marker_path, recursive=False)
-
-    def _dir_has_data(self, base: str) -> bool:
-        """True when ``base`` holds at least one shard partition with
-        a data file.  Deleting EVERY vector leaves shard-less graph/
-        vector dirs (each shard "vanishes"), and reading those throws
-        UNABLE_TO_INFER_SCHEMA (review finding, r11 — pre-fix, a
-        delete-everything BRICKED the index: the commit recount threw
-        after the swaps and every later verb/probe threw too).  Every
-        read site guards with this; the first non-empty shard
-        short-circuits."""
-        return self.fs.dir_has_partition_data(base, "shard=")
-
-    def meta(self, ns: str) -> dict:
-        import json
-
-        path = f"{self._ns_dir(ns)}/{_HNSW_META}"
-        if not self.fs.exists(path):
-            raise HNSWIndexNotBuilt(
-                f"hnsw index {ns!r} has no {_HNSW_META} under "
-                f"{self.root} — run build() first")
-        return json.loads(self.fs.read_text(path))
-
-    def _write_meta(self, ns: str, doc: dict) -> None:
-        import json
-
-        self.fs.write_text_atomic(
-            f"{self._ns_dir(ns)}/{_HNSW_META}", json.dumps(doc))
-
-    def _commit_meta(self, ns: str, doc: dict) -> None:
-        """CAS-fenced meta flip — VectorIndex._commit_meta mirrored
-        (VERDICT r12 #4): every verb carries the ``txn`` it read at
-        entry into its commit; a concurrent maintainer's interleaved
-        commit makes the re-check fail LOUDLY
-        (:class:`~rados_timestore_spark.fsutil.ConcurrentMaintainerError`)
-        instead of silently losing an update.  Pre-r13 metas have no
-        ``txn`` — both sides default to 0."""
-        from rados_timestore_spark.fsutil import cas_commit_meta
-
-        cas_commit_meta(self.fs, f"{self._ns_dir(ns)}/{_HNSW_META}",
-                        f"{self._ns_dir(ns)}/{_HNSW_META}.lock",
-                        what=f"hnsw index {ns!r}", doc=doc)
 
     def _warn_if_overgrown(self, ns: str, doc: dict) -> None:
         """Mean-density tripwire for the append verbs (VERDICT r13
@@ -545,10 +389,10 @@ class HNSWIndex:
         corpus bytes).  ``over_bound`` lists the shards whose EXACT
         count exceeds :data:`SHARD_BOUND` — including skewed ones the
         append-time mean-density warning cannot see."""
-        self._restore_shard_remnants(ns)
+        self._restore_remnants(ns)
         doc = self.meta(ns)
         per: dict[int, int] = {}
-        if self._dir_has_data(self._vectors_dir(ns)):
+        if self._has_data(self._vectors_dir(ns)):
             rows = (self.spark.read.parquet(self._vectors_dir(ns))
                     .groupBy("shard").count().collect())
             per = {int(r["shard"]): int(r["count"]) for r in rows}
@@ -562,10 +406,10 @@ class HNSWIndex:
         }
 
     def maintain(self, ns: str) -> dict:
-        """Measure-then-heal in one verb (:meth:`VectorIndex.maintain`
-        mirrored): :meth:`stats` decides from exact per-shard counts,
-        and a violated sizing rule runs :meth:`reshard` at a shard
-        count derived by the shared pure rule
+        """Measure-then-heal in one verb: :meth:`stats` decides from
+        exact per-shard counts, and a violated sizing rule runs
+        :meth:`reshard` at a shard count derived by the shared pure
+        rule
         :func:`~rados_timestore_spark.fsutil.maintain_plan` (density
         restored to ``SHARD_BOUND // 2``; the count strictly GROWS
         because hash partitioning is a pure function of the count — a
@@ -692,7 +536,7 @@ class HNSWIndex:
         prev_txn, prev_bg = 0, 0
         try:
             self.meta(ns)
-            self._restore_shard_remnants(ns, sweep_stagings=True)
+            self._restore_remnants(ns, sweep_stagings=True)
             prior = self.meta(ns)
             prev_txn = int(prior.get("txn", 0))
             prev_bg = int(prior.get("build_gen", 0))
@@ -738,9 +582,8 @@ class HNSWIndex:
         exact files."""
         from pyspark.sql import functions as F
 
-        self._restore_shard_remnants(ns, sweep_stagings=True)  # BEFORE the entry read: a
-        # roll-forward recovery commits meta, and reading txn first
-        # would make THIS verb's commit fail spuriously
+        self._restore_remnants(ns, sweep_stagings=True)  # BEFORE the
+        # entry read: a roll-forward recovery commits meta
         doc = self.meta(ns)
         self._check_build_marker(ns, doc)
         shards, m, ef_c = doc["shards"], doc["m"], doc["ef_construction"]
@@ -756,15 +599,15 @@ class HNSWIndex:
         n_new = new.count()
         gdir, vdir = self._graph_dir(ns), self._vectors_dir(ns)
         # empty-tolerant reads: a delete-everything leaves shard-less
-        # dirs whose raw read throws (see _dir_has_data) — the batch
+        # dirs whose raw read throws (see _has_data) — the batch
         # is then entirely fresh
-        if self._dir_has_data(gdir):
+        if self._has_data(gdir):
             old_g = self.spark.read.parquet(gdir) \
                 .filter(F.col("shard").isin(affected)) \
                 .withColumn("shard", F.col("shard").cast("int"))
         else:
             old_g = self.spark.createDataFrame([], "shard int, vec_id long, level int, layer int, neighbors array<long>")
-        if self._dir_has_data(vdir):
+        if self._has_data(vdir):
             old_v = self.spark.read.parquet(vdir) \
                 .filter(F.col("shard").isin(affected)) \
                 .withColumn("shard", F.col("shard").cast("int")) \
@@ -819,17 +662,8 @@ class HNSWIndex:
         # exactly-once streaming ingest.
         (new.repartition(len(affected), "shard")
          .write.mode("append").partitionBy("shard").parquet(vdir))
-        for s in affected:
-            old_dir = f"{gdir}/shard={s}.old"
-            if self.fs.exists(f"{gdir}/shard={s}"):
-                if not self.fs.rename(f"{gdir}/shard={s}", old_dir):
-                    raise IOError(f"append({ns!r}): cannot move shard {s}")
-            if not self.fs.rename(f"{staging}/shard={s}",
-                                  f"{gdir}/shard={s}"):
-                self.fs.rename(old_dir, f"{gdir}/shard={s}")
-                raise IOError(f"append({ns!r}): swap failed, shard {s}")
-            self.fs.delete(old_dir, recursive=True)
-        self.fs.delete(staging, recursive=True)
+        self._swap_parts(gdir, staging, [f"shard={s}" for s in affected],
+                         f"append({ns!r})")
         # recount from layer-0 graph rows (one row per node) — same
         # self-healing accounting as append_batch's commit
         doc["n_vectors"] = int(
@@ -846,9 +680,8 @@ class HNSWIndex:
                      app_id: str | None = None) -> dict:
         """IDEMPOTENT append keyed by a monotone ``batch_id`` — the
         exactly-once ingest primitive for streaming (foreachBatch
-        passes its micro-batch id), mirroring
-        :meth:`VectorIndex.append_batch`.  Replaying any prefix of
-        batches after a crash converges to single-copy state:
+        passes its micro-batch id).  Replaying any prefix of batches
+        after a crash converges to single-copy state:
 
         * fence: a batch at or below ``meta['last_batch_id']`` is a
           completed replay — skipped outright;
@@ -865,22 +698,17 @@ class HNSWIndex:
           fence makes the batch a no-op.
 
         ``app_id`` (r12, ADVICE r11) scopes the fence to one
-        checkpoint lineage (fence in ``meta['batch_fences']`` — see
-        :meth:`VectorIndex.append_batch`): micro-batch ids restart at
-        0 under a new checkpoint directory, and the unscoped fence
-        would silently drop the new lineage's early batches.
+        checkpoint lineage (see
+        :meth:`~rados_timestore_spark.fsutil.IndexKernel._batch_fence`).
         """
         from pyspark.sql import functions as F
 
-        self._restore_shard_remnants(ns, sweep_stagings=True)  # BEFORE the entry read
-        # (see append): recovery may commit meta
+        self._restore_remnants(ns, sweep_stagings=True)  # BEFORE the
+        # entry read (see append): recovery may commit meta
         doc = self.meta(ns)
         self._check_build_marker(ns, doc)
         entry_txn = int(doc.get("txn", 0))
-        fence = (int(doc.get("batch_fences", {}).get(app_id, -1))
-                 if app_id is not None
-                 else int(doc.get("last_batch_id", -1)))
-        if int(batch_id) <= fence:
+        if int(batch_id) <= self._batch_fence(doc, app_id):
             return doc
         shards, m, ef_c = doc["shards"], doc["m"], doc["ef_construction"]
         from rados_timestore_spark.vector_index import (
@@ -897,13 +725,7 @@ class HNSWIndex:
         # STORED embedding must not flip between a crashed attempt
         # and its replay
         vdir, gdir = self._vectors_dir(ns), self._graph_dir(ns)
-        # lineage-scoped prefix (see VectorIndex.append_batch): two
-        # lineages' equal batch ids must never sweep each other's
-        # committed vector files
-        from rados_timestore_spark.vector_index import _app_tag
-
-        prefix = (f"b{int(batch_id)}-" if app_id is None
-                  else f"a{_app_tag(app_id)}b{int(batch_id)}-")
+        suffix, prefix = self._batch_names(batch_id, app_id)
         # Sweep THIS batch's leftover vector files before anything
         # reads vdir: a crashed attempt of the same batch may have
         # promoted them, and they must not count as "already indexed"
@@ -922,14 +744,14 @@ class HNSWIndex:
         touched = sorted(r.shard for r in
                          new.select("shard").distinct().collect())
         fresh = new
-        if touched and self._dir_has_data(gdir):
+        if touched and self._has_data(gdir):
             graphed_ids = (self.spark.read.parquet(gdir)
                            .filter(F.col("shard").isin(touched))
                            .select("vec_id").distinct())
             fresh = new.join(graphed_ids, "vec_id", "left_anti")
         if touched:
             to_store = new
-            if self._dir_has_data(vdir):
+            if self._has_data(vdir):
                 have_vec = (self.spark.read.parquet(vdir)
                             .filter(F.col("shard").isin(touched))
                             .select("vec_id").distinct())
@@ -938,11 +760,7 @@ class HNSWIndex:
                                   .select("shard").distinct().collect())
             if store_shards:
                 # 1. vectors, exactly-once by prefix sweep + re-promote
-                # lineage-scoped like the file prefix (see
-                # VectorIndex.append_batch, review finding r12)
-                _tag = ("" if app_id is None
-                        else f"a{_app_tag(app_id)}_")
-                stage = f"{vdir}.batch_{_tag}{int(batch_id)}"
+                stage = f"{vdir}{suffix}"
                 if self.fs.exists(stage):
                     self.fs.delete(stage, recursive=True)
                 # one task per touched shard (the build-write shape):
@@ -958,14 +776,14 @@ class HNSWIndex:
         if affected:
             # 2. graph: reinsert only the not-yet-present nodes
             batch_ids = fresh.select("vec_id")
-            if self._dir_has_data(gdir):
+            if self._has_data(gdir):
                 old_g = self.spark.read.parquet(gdir) \
                     .filter(F.col("shard").isin(affected)) \
                     .withColumn("shard", F.col("shard").cast("int"))
             else:
                 old_g = self.spark.createDataFrame(
                     [], "shard int, vec_id long, level int, layer int, neighbors array<long>")
-            if self._dir_has_data(vdir):
+            if self._has_data(vdir):
                 old_v = (self.spark.read.parquet(vdir)
                          .filter(F.col("shard").isin(affected))
                          .withColumn("shard", F.col("shard").cast("int"))
@@ -1013,27 +831,14 @@ class HNSWIndex:
                                "shard int, vec_id long, level int, "
                                "layer int, neighbors array<long>")
             )
-            _tag = "" if app_id is None else f"a{_app_tag(app_id)}_"
-            g_stage = f"{gdir}.batch_{_tag}{int(batch_id)}"
+            g_stage = f"{gdir}{suffix}"
             if self.fs.exists(g_stage):
                 self.fs.delete(g_stage, recursive=True)
             (regraph.write.mode("overwrite").partitionBy("shard")
              .parquet(g_stage))
-            for s in affected:
-                old_dir = f"{gdir}/shard={s}.old"
-                if self.fs.exists(f"{gdir}/shard={s}"):
-                    if not self.fs.rename(f"{gdir}/shard={s}", old_dir):
-                        raise IOError(
-                            f"append_batch({ns!r}, {batch_id}): "
-                            f"cannot move shard {s}")
-                if not self.fs.rename(f"{g_stage}/shard={s}",
-                                      f"{gdir}/shard={s}"):
-                    self.fs.rename(old_dir, f"{gdir}/shard={s}")
-                    raise IOError(
-                        f"append_batch({ns!r}, {batch_id}): swap "
-                        f"failed, shard {s}")
-                self.fs.delete(old_dir, recursive=True)
-            self.fs.delete(g_stage, recursive=True)
+            self._swap_parts(gdir, g_stage,
+                             [f"shard={s}" for s in affected],
+                             f"append_batch({ns!r}, {batch_id})")
 
         # 3. commit point.  n_vectors is RECOMPUTED from the graph
         # (every node has exactly one layer-0 adjacency row) rather
@@ -1043,23 +848,15 @@ class HNSWIndex:
         # an increment gets one of the two wrong, the recount heals
         # both (ADVICE r10).
         # commit-time re-read refreshes bookkeeping; the CAS txn is
-        # the one captured at ENTRY (see VectorIndex.append_batch)
+        # the one captured at ENTRY: a concurrent maintainer's window
+        # spans the whole verb (VERDICT r12 #4)
         doc = self.meta(ns)
         doc["txn"] = entry_txn
         doc["n_vectors"] = int(
             self.spark.read.parquet(gdir)
             .filter(F.col("layer") == 0).count()
-        ) if self._dir_has_data(gdir) else 0
-        if app_id is not None:
-            from rados_timestore_spark.fsutil import bump_fence_lru
-
-            # LRU-bounded lineages (ADVICE r12 #4, rationale at
-            # fsutil.MAX_FENCE_LINEAGES)
-            doc["batch_fences"] = bump_fence_lru(
-                dict(doc.get("batch_fences", {})), app_id,
-                int(batch_id))
-        else:
-            doc["last_batch_id"] = int(batch_id)
+        ) if self._has_data(gdir) else 0
+        self._advance_batch_fence(doc, app_id, batch_id)
         doc["version"] = int(doc["version"]) + 1
         self._commit_meta(ns, doc)
         self._warn_if_overgrown(ns, doc)
@@ -1085,14 +882,13 @@ class HNSWIndex:
         from pyspark.sql import DataFrame as _DF
         from pyspark.sql import functions as F
 
-        self._restore_shard_remnants(ns, sweep_stagings=True)  # BEFORE the entry read: a
-        # roll-forward recovery commits meta, and reading txn first
-        # would make THIS verb's commit fail spuriously
+        self._restore_remnants(ns, sweep_stagings=True)  # BEFORE the
+        # entry read: a roll-forward recovery commits meta
         doc = self.meta(ns)
         self._check_build_marker(ns, doc)
         shards, m, ef_c = doc["shards"], doc["m"], doc["ef_construction"]
         vdir, gdir = self._vectors_dir(ns), self._graph_dir(ns)
-        if not self._dir_has_data(vdir):
+        if not self._has_data(vdir):
             # already-empty index (delete-everything happened): treat
             # like the no-victims replay below — heal stale meta and
             # remnants, never read the shard-less dirs
@@ -1124,7 +920,7 @@ class HNSWIndex:
         if not affected:
             # May be the REPLAY of a delete that crashed after its
             # last shard swap but before its meta write (crash-fuzz
-            # finding, r11, mirrored from VectorIndex): files are
+            # finding, r11): files are
             # final, meta is stale, `.deleting` stages may linger.
             # Two-phase recount (two review findings balanced): the
             # CHEAP footer-only vectors count is the suspicion
@@ -1138,12 +934,12 @@ class HNSWIndex:
             # recount.
             n_vec = int(
                 self.spark.read.parquet(vdir).count()
-            ) if self._dir_has_data(vdir) else 0
+            ) if self._has_data(vdir) else 0
             if int(doc["n_vectors"]) != n_vec:
                 n_live = int(
                     self.spark.read.parquet(gdir)
                     .filter(F.col("layer") == 0).count()
-                ) if self._dir_has_data(gdir) else 0
+                ) if self._has_data(gdir) else 0
                 if int(doc["n_vectors"]) != n_live:
                     doc["n_vectors"] = n_live
                     doc["version"] = int(doc["version"]) + 1
@@ -1185,26 +981,16 @@ class HNSWIndex:
          .parquet(g_stage))
         (surv.repartition(len(affected), "shard")
          .write.mode("overwrite").partitionBy("shard").parquet(v_stage))
+        # a shard that held only victims has no staged dir: it
+        # vanishes
         for base, stage in ((gdir, g_stage), (vdir, v_stage)):
-            for s in affected:
-                old_dir = f"{base}/shard={s}.old"
-                if self.fs.exists(f"{base}/shard={s}"):
-                    if not self.fs.rename(f"{base}/shard={s}", old_dir):
-                        raise IOError(
-                            f"delete({ns!r}): cannot move shard {s}")
-                src = f"{stage}/shard={s}"
-                if self.fs.exists(src):
-                    if not self.fs.rename(src, f"{base}/shard={s}"):
-                        self.fs.rename(old_dir, f"{base}/shard={s}")
-                        raise IOError(
-                            f"delete({ns!r}): swap failed, shard {s}")
-                # else: the shard held only victims — it vanishes
-                self.fs.delete(old_dir, recursive=True)
-            self.fs.delete(stage, recursive=True)
+            self._swap_parts(base, stage,
+                             [f"shard={s}" for s in affected],
+                             f"delete({ns!r})")
         doc["n_vectors"] = int(
             self.spark.read.parquet(gdir)
             .filter(F.col("layer") == 0).count()
-        ) if self._dir_has_data(gdir) else 0
+        ) if self._has_data(gdir) else 0
         doc["version"] = int(doc["version"]) + 1
         self._commit_meta(ns, doc)
         return removed
@@ -1229,22 +1015,23 @@ class HNSWIndex:
         vectors would (law-tested) — probes on the resharded index
         are exactly fresh-build probes.
 
-        Crash safety: both staging dirs are written first, then the
+        Crash safety: both staging dirs are written first, then
+        :meth:`_commit_relayout` fences the txn and writes the
         roll-forward marker (the commit point — it persists the full
         target meta), then the two whole-dir swaps, then the meta
-        CAS-commit and marker removal.  A kill before the marker
-        leaves orphan staging (swept at next entry); a kill after it
-        rolls FORWARD at the next verb/probe entry
-        (:meth:`_restore_shard_remnants`).  Serial with the other
+        commit and marker removal.  A kill before the marker leaves
+        orphan staging (swept at next entry); a kill after it rolls
+        FORWARD at the next verb/probe entry
+        (:meth:`_restore_remnants`).  Serial with the other
         maintenance verbs, CAS-fenced like them.
         """
         import json
 
         from pyspark.sql import functions as F
 
-        self._restore_shard_remnants(ns, sweep_stagings=True)  # BEFORE the entry read
-        # (see append): a crashed PREVIOUS reshard rolls forward here
-        # and commits meta
+        self._restore_remnants(ns, sweep_stagings=True)  # BEFORE the
+        # entry read (see append): a crashed PREVIOUS reshard rolls
+        # forward here and commits meta
         doc = self.meta(ns)
         self._check_build_marker(ns, doc)
         entry_txn = int(doc.get("txn", 0))
@@ -1253,7 +1040,7 @@ class HNSWIndex:
             raise ValueError(f"reshard({ns!r}): shards must be >= 1")
         m, ef_c = int(doc["m"]), int(doc["ef_construction"])
         vdir, gdir = self._vectors_dir(ns), self._graph_dir(ns)
-        if not self._dir_has_data(vdir):
+        if not self._has_data(vdir):
             # empty index: just commit the new shard count — the next
             # append lands in the new layout
             doc["shards"] = shards
@@ -1289,45 +1076,8 @@ class HNSWIndex:
             f"{g_stage}/{_GRAPH_MARKER}",
             json.dumps({"build_gen": target["build_gen"]}))
         # COMMIT POINT: from here the reshard completes even across a
-        # kill (roll-forward at every verb/probe entry).  The marker
-        # write is CAS-fenced like every commit — a maintainer that
-        # interleaved since the entry read fails loudly here, before
-        # anything swapped.
-        from rados_timestore_spark.fsutil import (
-            ConcurrentMaintainerError, flip_lock,
-        )
-
-        with flip_lock(self.fs, f"{self._ns_dir(ns)}/{_HNSW_META}.lock",
-                       what=f"hnsw index {ns!r}"):
-            stored_doc = self.meta(ns)
-            stored_txn = int(stored_doc.get("txn", 0))
-            if stored_txn != entry_txn:
-                raise ConcurrentMaintainerError(
-                    f"hnsw index {ns!r}: meta txn advanced {entry_txn} "
-                    f"-> {stored_txn} during reshard (concurrent "
-                    f"maintainer detected); re-run the verb")
-            # Advance the stored txn UNDER THE SAME LOCK as the marker
-            # write (ADVICE r14 #1): a maintainer verb already past its
-            # entry read could otherwise pass cas_commit_meta in the
-            # window between the commit point and the roll-forward's
-            # meta write — the swaps would then silently clobber its
-            # changes.  With the bump, its CAS re-check sees
-            # txn=entry+1 != its entry txn and fails loudly
-            # (ConcurrentMaintainerError), matching every other verb's
-            # guarantee.  Fence BEFORE marker: a kill between the two
-            # writes then ABORTS the reshard (marker-less stagings are
-            # swept at the next verb entry; one txn number is burned)
-            # instead of rolling forward with the fence never landed.
-            # The roll-forward's own meta write bumps again (stored+1),
-            # so the committed index lands at entry+2.
-            fence_doc = dict(stored_doc)
-            fence_doc["txn"] = entry_txn + 1
-            self._write_meta(ns, fence_doc)
-            self.fs.write_text_atomic(
-                f"{self._ns_dir(ns)}/{_RESHARD_MARKER}",
-                json.dumps(target))
-        self._restore_shard_remnants(ns)
-        return self.meta(ns)
+        # kill (roll-forward at every verb/probe entry)
+        return self._commit_relayout(ns, entry_txn, target)
 
     # ------------------------------------------------------ compact
 
@@ -1339,14 +1089,12 @@ class HNSWIndex:
         rows exactly.  Staging + two renames, the same swap discipline
         as the other maintenance verbs.  Returns the file count
         before compaction."""
-        # whole-dir swap rollback now lives in _restore_shard_remnants
-        # (every verb/probe entry), not just here; it runs BEFORE the
+        self._restore_remnants(ns, sweep_stagings=True)  # BEFORE the
         # entry read (see append): recovery may commit meta
-        self._restore_shard_remnants(ns, sweep_stagings=True)
         doc = self.meta(ns)
         self._check_build_marker(ns, doc)
         vdir = self._vectors_dir(ns)
-        if not self._dir_has_data(vdir):
+        if not self._has_data(vdir):
             return 0   # empty index (delete-everything): nothing to pack
         vecs = self.spark.read.parquet(vdir) \
             .withColumn("shard", _shard_int())
@@ -1356,17 +1104,10 @@ class HNSWIndex:
             self.fs.delete(staging, recursive=True)
         (vecs.repartition(int(doc["shards"]), "shard")
          .write.mode("overwrite").partitionBy("shard").parquet(staging))
-        old = f"{vdir}.old"
-        if self.fs.exists(old):
-            self.fs.delete(old, recursive=True)
-        if not self.fs.rename(vdir, old):
-            raise IOError(f"compact({ns!r}): cannot move live vectors")
-        if not self.fs.rename(staging, vdir):
-            self.fs.rename(old, vdir)
-            raise IOError(f"compact({ns!r}): swap failed")
-        self.fs.delete(old, recursive=True)
+        self._swap_dir(vdir, staging, f"compact({ns!r})")
         # compact changes no meta field; the fenced txn bump makes an
-        # interleaved maintainer loud (see VectorIndex.compact)
+        # interleaved maintainer loud on one side or the other instead
+        # of silently racing the directory swap
         self._commit_meta(ns, doc)
         return int(n_files)
 
@@ -1388,7 +1129,7 @@ class HNSWIndex:
         — and the vectors swap never precedes the graph swap — so the
         pair is consistent.  A mismatch retries the whole entry (the
         roll-forward completes under the flip lock at
-        :meth:`_restore_shard_remnants`, so a retry converges on the
+        :meth:`_restore_remnants`, so a retry converges on the
         post-reshard state).
 
         Returns ``(doc, graph, vectors)``; graph/vectors are ``None``
@@ -1398,7 +1139,7 @@ class HNSWIndex:
         populated but gdir shard-less; serving the pre-batch (empty)
         state is the consistent answer until the batch replays.
 
-        Scope of the guarantee (r14 review, VectorIndex parity): the
+        Scope of the guarantee (r14 review): the
         verified window covers PLAN CONSTRUCTION — both file listings
         and the marker re-check run eagerly here.  The returned
         DataFrames are lazy; a reshard that completes AFTER this
@@ -1412,13 +1153,13 @@ class HNSWIndex:
 
         last = None
         for _ in range(5):
-            self._restore_shard_remnants(ns)  # BEFORE the meta read:
+            self._restore_remnants(ns)  # BEFORE the meta read:
             # a roll-forward recovery commits meta (shards/build_gen),
             # and a stale doc would pair new graphs with old params
             doc = self.meta(ns)
             self._check_build_marker(ns, doc)
-            if (not self._dir_has_data(self._vectors_dir(ns))
-                    or not self._dir_has_data(self._graph_dir(ns))):
+            if (not self._has_data(self._vectors_dir(ns))
+                    or not self._has_data(self._graph_dir(ns))):
                 return doc, None, None
             graph = self.spark.read.parquet(self._graph_dir(ns)) \
                 .withColumn("shard", _shard_int())

@@ -64,9 +64,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rados_timestore_spark.core import one_slice_df
-from rados_timestore_spark.fsutil import (
-    ConcurrentMaintainerError, HadoopFS, flip_lock,
-)
+from rados_timestore_spark.fsutil import IndexKernel
 from rados_timestore_spark.session import shuffle_partition_count
 
 _META = "_vidx_meta.json"
@@ -84,11 +82,10 @@ _PQ_MARKER = "_pq_meta.json"
 #: marker-aware rebuild of a legacy index, crash-before-marker).
 _CENT_MARKER = "_cent_meta.json"
 #: Roll-forward marker for :meth:`VectorIndex.retrain` (r14, VERDICT
-#: r13 #2 — the HNSW ``_RESHARD_MARKER`` pattern mirrored): written
-#: under the meta flip lock AFTER all three staging dirs are complete,
-#: carrying the full target meta.  From that commit point the retrain
-#: completes deterministically at every verb/probe entry
-#: (``_roll_retrain_forward``), across any kill.
+#: r13 #2): written under the meta flip lock AFTER all three staging
+#: dirs are complete, carrying the full target meta.  From that commit
+#: point the retrain completes deterministically at every verb/probe
+#: entry (``IndexKernel._roll_forward``), across any kill.
 _RETRAIN_MARKER = "_retrain.json"
 
 
@@ -106,17 +103,6 @@ def _bucket_shaped(df: DataFrame) -> DataFrame:
     file count stays exactly k at any N."""
     return df.repartition(shuffle_partition_count(df.sparkSession),
                           "bucket")
-
-
-def _app_tag(app_id: str) -> str:
-    """Filesystem-safe stable tag for an ingest lineage id — embedded
-    in per-batch file prefixes so two lineages' equal batch ids never
-    sweep each other's committed files (see append_batch).  sha1 is
-    fine here: the tag only needs to separate lineages, not resist an
-    adversary, and 12 hex chars keep promoted file names short."""
-    import hashlib
-
-    return hashlib.sha1(app_id.encode("utf-8")).hexdigest()[:12]
 
 
 def dedup_ids_deterministic(df: DataFrame, id_col: str,
@@ -380,8 +366,22 @@ class RetrainRaceError(IOError):
     is flipping the index faster than probes can snapshot it."""
 
 
-class VectorIndex:
+class VectorIndex(IndexKernel):
     """Build-once / probe-many IVF index persisted under ``root``."""
+
+    META = _META
+    NOT_BUILT = VectorIndexNotBuilt
+    WHAT = "vector index"
+    PART_COL = "bucket"
+    WHOLE_DIRS = ("assignments", "pq_codebooks")
+    PART_DIRS = ("assignments",)
+    ROLL_VERB = "retrain"
+    ROLL_MARKER = _RETRAIN_MARKER
+    #: centroids first: their staged ``_CENT_MARKER`` binds the new
+    #: routing to the target version (see :meth:`_pruned_scan`)
+    ROLL_DIRS = ("centroids", "pq_codebooks", "assignments")
+    ROLL_STAGING = ".retraining"
+    ROLL_PRE = ".preretrain"
 
     #: Per-bucket sizing rule (the HNSW :data:`~rados_timestore_spark.
     #: hnsw.HNSWIndex.SHARD_BOUND` analog): probe cost is
@@ -394,9 +394,7 @@ class VectorIndex:
     BUCKET_BOUND = 1_000_000
 
     def __init__(self, spark: SparkSession, root: str):
-        self.spark = spark
-        self.root = root.rstrip("/")
-        self.fs = HadoopFS(spark, self.root)
+        super().__init__(spark, root)
         # routing-table cache keyed by (ns, meta version): probes hit
         # the k-row centroid matrix constantly, and the version key
         # invalidates on rebuild — the same read-side caching the
@@ -404,9 +402,6 @@ class VectorIndex:
         self._cent_cache: dict[tuple[str, int], tuple] = {}
 
     # ------------------------------------------------------- layout
-
-    def _ns_dir(self, ns: str) -> str:
-        return f"{self.root}/{ns}"
 
     def _centroids_dir(self, ns: str) -> str:
         return f"{self._ns_dir(ns)}/centroids"
@@ -416,107 +411,6 @@ class VectorIndex:
 
     def _pq_dir(self, ns: str) -> str:
         return f"{self._ns_dir(ns)}/pq_codebooks"
-
-    def _restore_remnants(self, ns: str,
-                          sweep_stagings: bool = False) -> None:
-        """Crash recovery for the swap windows (the r11 HNSW fix,
-        cross-applied): the per-bucket swap (delete) and the whole-dir
-        swaps (compact, enable_pq) are rename(live -> .old) then
-        rename(staging -> live) then delete(.old).  A crash BETWEEN
-        the renames leaves no live dir — the uncommitted op rolls back
-        by restoring the .old remnant (pre-fix, delete()'s replay saw
-        the vanished bucket as unaffected and the victims' bucket was
-        lost; compact's re-entry even deleted the .old holding the
-        only copy).  A crash AFTER the second rename leaves a stale
-        .old beside the committed new dir — deleted.  Every verb and
-        probe entry calls this first.
-
-        ALSO rolls :meth:`retrain` FORWARD (r14, the HNSW reshard
-        pattern mirrored): the retrain marker persists the full
-        target meta before the first of retrain's whole-dir swaps
-        (centroids, then pq codebooks, then assignments), so a kill
-        anywhere between them completes deterministically here —
-        under the meta flip lock, so exactly one runner executes the
-        swaps.
-
-        ``sweep_stagings`` (VERB entries only): without a marker,
-        leftover ``.retraining`` staging dirs belong to a retrain
-        that died before its commit point and are swept.  PROBE
-        entries must NOT sweep (the HNSW r13 review finding): a LIVE
-        retrain spends its whole staging-build window before the
-        marker exists, and probes legitimately run concurrently with
-        the single maintainer."""
-        if not self.fs.exists(self._ns_dir(ns)):
-            return  # never built: let the caller's meta() raise
-        marker_path = f"{self._ns_dir(ns)}/{_RETRAIN_MARKER}"
-        if self.fs.exists(marker_path):
-            with flip_lock(self.fs, f"{self._ns_dir(ns)}/{_META}.lock",
-                           what=f"vector index {ns!r}"):
-                self._roll_retrain_forward(ns, marker_path)
-        live = self._assignments_dir(ns)
-        if sweep_stagings and not self.fs.exists(marker_path):
-            for base in (self._centroids_dir(ns), self._pq_dir(ns),
-                         live):
-                staging = f"{base}.retraining"
-                if self.fs.exists(staging):
-                    # a retrain that died before its marker: nothing
-                    # was swapped, the staging is an orphan
-                    self.fs.delete(staging, recursive=True)
-        for whole in (live, self._pq_dir(ns)):
-            old = f"{whole}.old"
-            if self.fs.exists(old):
-                if self.fs.exists(whole):
-                    self.fs.delete(old, recursive=True)
-                else:
-                    self.fs.rename(old, whole)
-        for name in self.fs.list_dirs(live):
-            if not name.endswith(".old") or "=" not in name:
-                continue
-            bucket_live = f"{live}/{name[:-len('.old')]}"
-            if self.fs.exists(bucket_live):
-                self.fs.delete(f"{live}/{name}", recursive=True)
-            else:
-                self.fs.rename(f"{live}/{name}", bucket_live)
-
-    def _roll_retrain_forward(self, ns: str, marker_path: str) -> None:
-        """Complete a committed retrain's swaps + meta, CALLED WITH
-        THE META FLIP LOCK HELD (see _restore_remnants) — only one
-        runner executes this at a time; a contender that waited out
-        the lock re-checks the marker and finds it gone.
-
-        Swap order is the probe-consistency proof (the HNSW
-        _probe_snapshot argument, mirrored): the CENTROIDS dir — whose
-        staged ``_CENT_MARKER`` binds the new routing to the target
-        version — flips FIRST, so any probe that re-reads the live
-        centroid marker after listing its bucket files can prove its
-        snapshot predates the retrain entirely."""
-        if not self.fs.exists(marker_path):
-            return  # the lock's previous holder completed it
-        target = json.loads(self.fs.read_text(marker_path))
-        for base in (self._centroids_dir(ns), self._pq_dir(ns),
-                     self._assignments_dir(ns)):
-            staging, pre = f"{base}.retraining", f"{base}.preretrain"
-            if self.fs.exists(staging):
-                if self.fs.exists(base) and not self.fs.exists(pre):
-                    if not self.fs.rename(base, pre):
-                        raise IOError(
-                            f"retrain({ns!r}) roll-forward: cannot "
-                            f"move {base} aside")
-                if not self.fs.exists(base):
-                    if not self.fs.rename(staging, base):
-                        raise IOError(
-                            f"retrain({ns!r}) roll-forward: cannot "
-                            f"promote {staging}")
-            if self.fs.exists(pre):
-                self.fs.delete(pre, recursive=True)
-        stored = self.meta(ns)
-        if int(stored.get("version", 0)) < int(target["version"]):
-            # direct fenced write: the flip lock is already held (the
-            # CAS wrapper would self-deadlock), and the marker IS the
-            # commit — this is its tail, not a new commit point
-            target["txn"] = int(stored.get("txn", 0)) + 1
-            self._write_meta(ns, target)
-        self.fs.delete(marker_path, recursive=False)
 
     def _heal_after_noop_delete(self, ns: str) -> None:
         """A delete that finds no victims may be the REPLAY of one
@@ -535,15 +429,7 @@ class VectorIndex:
             self.fs.delete(staging, recursive=True)
 
     def _has_buckets(self, ns: str) -> bool:
-        """True when the assignments dir holds at least one bucket
-        partition with a data file — every read of the live table
-        treats bucket-less (delete-everything) or data-less (swept
-        crashed attempt) dirs as the empty index, the same
-        empty-is-absent convention the store uses for drained
-        generations (raw reads of either shape throw
-        UNABLE_TO_INFER_SCHEMA; review finding, r11)."""
-        return self.fs.dir_has_partition_data(
-            self._assignments_dir(ns), "bucket=")
+        return self._has_data(self._assignments_dir(ns))
 
     def _recount(self, ns: str) -> int:
         """Row count of the live assignments table — the source of
@@ -558,8 +444,8 @@ class VectorIndex:
 
     def _warn_if_overgrown(self, ns: str, doc: dict) -> None:
         """Mean-density tripwire for the append verbs (VERDICT r13
-        "What's missing" #2, cross-applied from HNSW) — see
-        :data:`BUCKET_BOUND` for why the hot path checks the mean."""
+        "What's missing" #2) — see :data:`BUCKET_BOUND` for why the
+        hot path checks the mean."""
         import warnings
 
         k = max(int(doc.get("k", 1)), 1)
@@ -578,8 +464,7 @@ class VectorIndex:
     def stats(self, ns: str) -> dict:
         """Exact per-bucket row counts against the sizing rule — the
         observability verb that makes the retrain story operational
-        (VERDICT r13 "What's missing" #2; :meth:`HNSWIndex.stats`
-        mirrored).  One partition-column aggregation over the
+        (VERDICT r13 "What's missing" #2).  One partition-column aggregation over the
         assignment table (parquet footer counts per bucket directory —
         cost bounded by file count, not corpus bytes).  ``over_bound``
         lists buckets whose EXACT count exceeds :data:`BUCKET_BOUND` —
@@ -651,45 +536,6 @@ class VectorIndex:
         doc = self.retrain(ns, k=k_new, trainer="kmeans")
         return {"action": "retrain", "k": int(doc["k"]),
                 "k_requested": int(k_new), "stats": st, "meta": doc}
-
-    def meta(self, ns: str) -> dict:
-        path = f"{self._ns_dir(ns)}/{_META}"
-        if not self.fs.exists(path):
-            raise VectorIndexNotBuilt(
-                f"vector index {ns!r} has no {_META} under {self.root} "
-                f"— run build() first"
-            )
-        return json.loads(self.fs.read_text(path))
-
-    def _write_meta(self, ns: str, doc: dict) -> None:
-        self.fs.write_text_atomic(
-            f"{self._ns_dir(ns)}/{_META}", json.dumps(doc)
-        )
-
-    def _commit_meta(self, ns: str, doc: dict) -> None:
-        """CAS-fenced meta flip (VERDICT r12 #4, the store's
-        ``_write_meta_cas`` cross-applied): maintenance verbs on one
-        index are serial BY CONTRACT, and until r13 that contract was
-        enforced only by documentation — a second concurrent
-        maintainer silently lost the first's meta update (and worse,
-        interleaved its file swaps).  Every verb now carries the
-        ``txn`` counter it READ at entry into its commit; under the
-        flip lock the stored txn is re-checked and a mismatch raises
-        :class:`~rados_timestore_spark.fsutil.ConcurrentMaintainerError`
-        instead of clobbering.  Indexes persisted before r13 have no
-        ``txn`` field — both sides then default to 0 and the first
-        fenced commit starts the counter.
-
-        The lock serializes the re-check->write window itself (atomic
-        create-exclusive on HDFS/local, best-effort on object stores);
-        the txn CAS is the backstop for interleavings wider than the
-        window — a verb's Spark jobs run for seconds between its
-        entry read and this commit."""
-        from rados_timestore_spark.fsutil import cas_commit_meta
-
-        cas_commit_meta(self.fs, f"{self._ns_dir(ns)}/{_META}",
-                        f"{self._ns_dir(ns)}/{_META}.lock",
-                        what=f"vector index {ns!r}", doc=doc)
 
     # -------------------------------------------------------- build
 
@@ -765,10 +611,9 @@ class VectorIndex:
         # overwrite): the txn captured here makes the whole rebuild a
         # CAS window, so a maintainer interleaving anywhere inside it
         # fails the commit loudly (VERDICT r12 #4).  A REBUILD must
-        # first run crash recovery like every other verb (the HNSW
-        # r13 review finding, mirrored for retrain): a pending retrain
-        # marker left by a crash would otherwise roll forward AFTER
-        # this build commits — renaming the fresh build aside and
+        # first run crash recovery like every other verb (r13 review
+        # finding): a pending retrain marker left by a crash would
+        # otherwise roll forward AFTER this build commits — renaming the fresh build aside and
         # promoting the pre-crash staging over it (silent loss).
         prev_version, prev_pq_gen, prev_txn = 0, 0, 0
         try:
@@ -962,8 +807,8 @@ class VectorIndex:
         (Structured Streaming's contract for foreachBatch) — but only
         WITHIN one checkpoint lineage: a stream restarted with a new
         checkpoint restarts them at 0.  ``app_id`` (r12, ADVICE r11)
-        scopes the fence to one lineage (Delta's (txnAppId,
-        txnVersion) pattern, fence in ``meta['batch_fences']``);
+        scopes the fence to one lineage (see
+        :meth:`~rados_timestore_spark.fsutil.IndexKernel._batch_fence`);
         :func:`streaming.vector_ingest.stream_vectors` derives it
         from the checkpoint's query id.  Without an app id, the
         checkpoint lineage must never be reset against an existing
@@ -975,25 +820,17 @@ class VectorIndex:
         # unchanged, but the entry txn must be the post-roll one
         doc = self.meta(ns)
         entry_txn = int(doc.get("txn", 0))
-        fence = (int(doc.get("batch_fences", {}).get(app_id, -1))
-                 if app_id is not None
-                 else int(doc.get("last_batch_id", -1)))
-        if int(batch_id) <= fence:
+        if int(batch_id) <= self._batch_fence(doc, app_id):
             return doc
         cids, C = self._load_centroids(ns, int(doc["version"]))
         live = self._assignments_dir(ns)
-        # stage names are lineage-scoped like the file prefixes:
-        # two lineages share batch id 0, and an unscoped stage's
-        # delete-if-exists would clobber the other's in-flight
-        # staging on interleaved replays (review finding r12).
-        # NOTE: verbs on one index still run SERIALLY (the
-        # maintenance contract) — the scoping makes interleaved
-        # crash-replays converge, it does not license concurrent
-        # writers; since r13 the meta commit IS CAS-fenced
-        # (_commit_meta), so an accidental second maintainer fails
-        # loudly instead of corrupting.
-        _tag = "" if app_id is None else f"a{_app_tag(app_id)}_"
-        stage = f"{live}.batch_{_tag}{int(batch_id)}"
+        # lineage-scoped stage and file prefix (see _batch_names).
+        # Verbs on one index still run SERIALLY (the maintenance
+        # contract): the scoping makes interleaved crash-replays
+        # converge, it does not license concurrent writers — the
+        # CAS-fenced meta commit fails a second maintainer loudly.
+        suffix, prefix = self._batch_names(batch_id, app_id)
+        stage = f"{live}{suffix}"
         if self.fs.exists(stage):
             self.fs.delete(stage, recursive=True)
         assigned = assign_to_centroids(
@@ -1003,8 +840,8 @@ class VectorIndex:
             pq_cb=(self._load_pq(ns, doc)
                    if "pq" in doc else None),
             pq_residual=bool(doc.get("pq", {}).get("residual")))
-        # Cross-batch redelivery guard (the HNSW r11 ADVICE fix,
-        # cross-applied): a vec_id redelivered under a DIFFERENT
+        # Cross-batch redelivery guard (ADVICE r11): a vec_id
+        # redelivered under a DIFFERENT
         # batch id (at-least-once source) must not land twice.  With
         # the centroids version fixed, a redelivered id assigns to
         # the SAME bucket as before, so the existing-id anti-join
@@ -1017,14 +854,6 @@ class VectorIndex:
         # stage itself, so assignment runs exactly once.
         (_bucket_shaped(assigned).write.mode("overwrite")
          .partitionBy("bucket").parquet(stage))
-        # The per-batch file prefix must be scoped like the fence:
-        # two lineages both have a "batch 0", and an unscoped b0-
-        # sweep would delete the OTHER lineage's committed batch-0
-        # files as "crashed-attempt remnants" (caught by the r12
-        # lineage tests — silent data loss).  Unkeyed callers keep
-        # the legacy b<id>- shape.
-        prefix = (f"b{int(batch_id)}-" if app_id is None
-                  else f"a{_app_tag(app_id)}b{int(batch_id)}-")
         existing = None
         bks = [int(d.split("=", 1)[1])
                for d in self.fs.list_dirs(stage)
@@ -1040,8 +869,7 @@ class VectorIndex:
         # safe.  Whole-tree, not per-staged-bucket (ADVICE r11): if
         # the centroids were retrained between the crashed attempt
         # and this replay, the old attempt's files can sit in buckets
-        # OUTSIDE this replay's staged set — the HNSW path's
-        # sweep_files shape, cross-applied.  (A retrain via build()
+        # OUTSIDE this replay's staged set.  (A retrain via build()
         # also rewrites the assignments dir wholesale, but the sweep
         # must not depend on that implementation detail.)
         if self._has_buckets(ns):
@@ -1099,16 +927,7 @@ class VectorIndex:
         # crash-after-promote replay and any redelivery the anti-join
         # already filtered — `n_vectors == count(rows)` is invariant.
         doc["n_vectors"] = self._recount(ns)
-        if app_id is not None:
-            from rados_timestore_spark.fsutil import bump_fence_lru
-
-            # LRU-bounded lineages (ADVICE r12 #4, rationale at
-            # fsutil.MAX_FENCE_LINEAGES)
-            doc["batch_fences"] = bump_fence_lru(
-                dict(doc.get("batch_fences", {})), app_id,
-                int(batch_id))
-        else:
-            doc["last_batch_id"] = int(batch_id)
+        self._advance_batch_fence(doc, app_id, batch_id)
         self._commit_meta(ns, doc)
         self._warn_if_overgrown(ns, doc)
         return doc
@@ -1219,10 +1038,8 @@ class VectorIndex:
         gen = max(int(doc.get("pq", {}).get("gen", 0)),
                   int(doc.get("pq_gen_floor", 0))) + 1
         cb_live = self._pq_dir(ns)
-        self._restore_remnants(ns)
-        cb_staging, cb_old = f"{cb_live}.staging", f"{cb_live}.old"
-        staging, old = f"{live}.pq_encoding", f"{live}.old"
-        for leftover in (cb_staging, cb_old, staging, old):
+        cb_staging, staging = f"{cb_live}.staging", f"{live}.pq_encoding"
+        for leftover in (cb_staging, staging):
             if self.fs.exists(leftover):
                 self.fs.delete(leftover, recursive=True)
         cv_type = "array<double>" if residual else "array<float>"
@@ -1249,21 +1066,8 @@ class VectorIndex:
         # promote: codebooks, then assignments, then the meta commit —
         # _load_pq's gen cross-check makes every window in between a
         # loud retry, never a silently-wrong serve
-        if self.fs.exists(cb_live):
-            if not self.fs.rename(cb_live, cb_old):
-                raise IOError(
-                    f"enable_pq({ns!r}): cannot move codebook dir")
-        if not self.fs.rename(cb_staging, cb_live):
-            if self.fs.exists(cb_old):
-                self.fs.rename(cb_old, cb_live)
-            raise IOError(f"enable_pq({ns!r}): codebook swap failed")
-        self.fs.delete(cb_old, recursive=True)
-        if not self.fs.rename(live, old):
-            raise IOError(f"enable_pq({ns!r}): cannot move live dir")
-        if not self.fs.rename(staging, live):
-            self.fs.rename(old, live)
-            raise IOError(f"enable_pq({ns!r}): staging swap failed")
-        self.fs.delete(old, recursive=True)
+        self._swap_dir(cb_live, cb_staging, f"enable_pq({ns!r})")
+        self._swap_dir(live, staging, f"enable_pq({ns!r})")
         doc = self.meta(ns)
         doc["txn"] = entry_txn  # CAS spans the whole verb (see build)
         doc["pq"] = {"m": int(m), "ksub": int(ksub),
@@ -1337,11 +1141,7 @@ class VectorIndex:
         persisted meta_cols, before any ranking).
         """
         self._restore_remnants(ns)  # BEFORE the meta read (r14 fuzz
-        # finding, fuel=57): a crashed retrain roll-forward mid-swap
-        # leaves the centroids dir renamed aside — the entry restore
-        # completes the swap and commits meta; reading meta (or the
-        # centroid marker) first would serve the torn state as a
-        # non-retryable error
+        # finding, fuel=57; see IndexKernel._restore_remnants)
         doc = self.meta(ns)
         if "pq" not in doc:
             raise VectorIndexNotBuilt(
@@ -1545,42 +1345,14 @@ class VectorIndex:
             self.fs.delete(staging, recursive=True)
         (_bucket_shaped(survivors).write.mode("overwrite")
          .partitionBy("bucket").parquet(staging))
-        def swap(b) -> None:
-            old = f"{live}/bucket={b}.old"
-            if not self.fs.rename(f"{live}/bucket={b}", old):
-                raise IOError(f"delete({ns!r}): cannot move bucket {b}")
-            src = f"{staging}/bucket={b}"
-            if self.fs.exists(src):
-                if not self.fs.rename(src, f"{live}/bucket={b}"):
-                    self.fs.rename(old, f"{live}/bucket={b}")
-                    raise IOError(
-                        f"delete({ns!r}): swap failed for bucket {b}")
-            # else: the bucket held only victims — it simply vanishes
-            self.fs.delete(old, recursive=True)
-
-        # Per-bucket swaps are independent metadata ops (each bucket's
-        # own rename/rename/delete triple); issue them from a small
-        # thread pool like promote_dir_tree's renames — serially this
-        # loop was 3-4 py4j round trips x affected buckets (~3 s of a
-        # 9 s delete at k=256; at k=4096 it would dominate the verb).
-        # Failure semantics unchanged: an error propagates and leaves
-        # some buckets swapped and some not — exactly the partial
-        # state a mid-loop crash always left, recovered by replaying
-        # the delete (remaining victims found) and the recount below.
-        if len(affected) > 4:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(
-                    max_workers=min(16, len(affected))) as pool:
-                for _ in pool.map(swap, affected):
-                    pass
-        else:
-            for b in affected:
-                swap(b)
-        self.fs.delete(staging, recursive=True)
+        # a bucket that held only victims has no staged dir: it
+        # vanishes
+        self._swap_parts(live, staging,
+                         [f"bucket={b}" for b in affected],
+                         f"delete({ns!r})")
         doc = self.meta(ns)
-        # RECOUNT from the live table, never decrement (the HNSW r11
-        # accounting fix, found again here by the crash fuzz): a kill
+        # RECOUNT from the live table, never decrement (r11 crash-fuzz
+        # finding): a kill
         # between the last bucket swap and this meta write makes the
         # replayed delete a no-op (no victims left to find), and a
         # kill mid-swap-loop makes `removed` count only the leftover
@@ -1621,22 +1393,15 @@ class VectorIndex:
         if not self._has_buckets(ns):
             return 0   # empty index (delete-everything): nothing to pack
         live = self._assignments_dir(ns)
-        staging, old = f"{live}.compacting", f"{live}.old"
-        for leftover in (staging, old):
-            if self.fs.exists(leftover):
-                self.fs.delete(leftover, recursive=True)
+        staging = f"{live}.compacting"
+        if self.fs.exists(staging):
+            self.fs.delete(staging, recursive=True)
         df = self.spark.read.parquet(live)
         # hash-distribute buckets, then partitionBy: each bucket lives
         # in exactly one task => exactly one file per bucket directory
         (_bucket_shaped(df).write.mode("overwrite")
          .partitionBy("bucket").parquet(staging))
-        if not self.fs.rename(live, old):
-            raise IOError(f"compact({ns!r}): cannot move live dir aside")
-        if not self.fs.rename(staging, live):
-            # roll back so the index stays readable
-            self.fs.rename(old, live)
-            raise IOError(f"compact({ns!r}): staging swap failed")
-        self.fs.delete(old, recursive=True)
+        self._swap_dir(live, staging, f"compact({ns!r})")
         self._commit_meta(ns, doc)
         return sum(
             1 for d in self.fs.list_dirs(live) if d.startswith("bucket=")
@@ -1650,9 +1415,8 @@ class VectorIndex:
     def retrain(self, ns: str, k: int | None = None,
                 trainer: str | None = None, iters: int = 2) -> dict:
         """Retrain the coarse quantizer at a new centroid count — the
-        bucket-growth escape hatch (VERDICT r13 #2, mirroring
-        :meth:`HNSWIndex.reshard` and the store's epoch rescale,
-        reference StoreHelpers.hs:194-221).  ``build(k=256)`` fixes
+        bucket-growth escape hatch (VERDICT r13 #2; the store's epoch
+        rescale, reference StoreHelpers.hs:194-221).  ``build(k=256)`` fixes
         the bucket count forever, and probe cost is nprobe x bucket
         size: at 100x corpus every bucket is 100x fatter and probes
         degrade linearly with no escape.  ``retrain(ns, k=N)``
@@ -1673,14 +1437,11 @@ class VectorIndex:
         exactly-once streaming ingest keeps its replay fences across
         the retrain.
 
-        Crash safety (the reshard pattern): all three staging dirs
-        (centroids + pq codebooks + assignments, each ``.retraining``)
-        are written first; then, under the meta flip lock, the stored
-        txn is CAS-re-checked, bumped (the mid-flight-maintainer
-        fence — a verb past its entry read fails its commit loudly
-        instead of being clobbered by the swaps), and the roll-forward
-        marker (the commit point, carrying the full target meta) is
-        written.  The swaps + meta commit then run at
+        Crash safety: all three staging dirs (centroids + pq
+        codebooks + assignments, each ``.retraining``) are written
+        first; then :meth:`_commit_relayout` fences the txn and writes
+        the roll-forward marker (the commit point, carrying the full
+        target meta).  The swaps + meta commit then run at
         :meth:`_restore_remnants` — here, or at the next verb/probe
         entry after a kill.  Centroids swap FIRST (their staged
         ``_CENT_MARKER`` binds the new routing to the target version),
@@ -1816,30 +1577,7 @@ class VectorIndex:
         target["cent_marker"] = True
         if pq_doc is not None:
             target["pq"] = dict(pq_doc)
-
-        # COMMIT POINT: CAS-check + txn fence + marker, one lock hold
-        # (the reshard pattern, incl. the ADVICE r14 #1 fence: bump
-        # the stored txn so a mid-flight maintainer's commit fails
-        # loudly instead of being clobbered by the swaps; fence BEFORE
-        # marker so a kill between the two aborts cleanly)
-        with flip_lock(self.fs, f"{self._ns_dir(ns)}/{_META}.lock",
-                       what=f"vector index {ns!r}"):
-            stored_doc = self.meta(ns)
-            stored_txn = int(stored_doc.get("txn", 0))
-            if stored_txn != entry_txn:
-                raise ConcurrentMaintainerError(
-                    f"vector index {ns!r}: meta txn advanced "
-                    f"{entry_txn} -> {stored_txn} during retrain "
-                    f"(concurrent maintainer detected); re-run the "
-                    f"verb")
-            fence_doc = dict(stored_doc)
-            fence_doc["txn"] = entry_txn + 1
-            self._write_meta(ns, fence_doc)
-            self.fs.write_text_atomic(
-                f"{self._ns_dir(ns)}/{_RETRAIN_MARKER}",
-                json.dumps(target))
-        self._restore_remnants(ns)
-        return self.meta(ns)
+        return self._commit_relayout(ns, entry_txn, target)
 
     # -------------------------------------------------------- probe
 
@@ -1869,14 +1607,13 @@ class VectorIndex:
         parquet row-group stats, applied BEFORE ranking so it prunes
         candidates and never reorders survivors.
 
-        ``expect_version`` (r14): retrain-swap consistency check, the
-        HNSW ``_probe_snapshot`` argument mirrored.  A concurrent
-        retrain roll-forward swaps centroids FIRST (their staged
-        ``_CENT_MARKER`` binds the new routing to the new version) and
-        assignments LAST, so re-reading the live centroid marker
-        AFTER this scan's file listing and still finding the entry
-        version proves the routing the caller loaded and the buckets
-        just listed belong to the same snapshot.  A mismatch raises
+        ``expect_version`` (r14): retrain-swap consistency check.  A
+        concurrent retrain roll-forward swaps centroids FIRST (their
+        staged ``_CENT_MARKER`` binds the new routing to the new
+        version) and assignments LAST, so re-reading the live centroid
+        marker AFTER this scan's file listing and still finding the
+        entry version proves the routing the caller loaded and the
+        buckets just listed belong to the same snapshot.  A mismatch raises
         loudly (retry the probe) — same loud-and-retryable contract
         as every rebuild-crash window here, never silently-wrong
         routing.
@@ -1996,11 +1733,7 @@ class VectorIndex:
         corpus regardless of total index size.
         """
         self._restore_remnants(ns)  # BEFORE the meta read (r14 fuzz
-        # finding, fuel=57): a crashed retrain roll-forward mid-swap
-        # leaves the centroids dir renamed aside — the entry restore
-        # completes the swap and commits meta; reading meta (or the
-        # centroid marker) first would serve the torn state as a
-        # non-retryable error
+        # finding, fuel=57; see IndexKernel._restore_remnants)
         doc = self.meta(ns)
         if not self._has_buckets(ns):
             # every bucket deleted: empty index, empty result (the
@@ -2063,11 +1796,7 @@ class VectorIndex:
         query set).
         """
         self._restore_remnants(ns)  # BEFORE the meta read (r14 fuzz
-        # finding, fuel=57): a crashed retrain roll-forward mid-swap
-        # leaves the centroids dir renamed aside — the entry restore
-        # completes the swap and commits meta; reading meta (or the
-        # centroid marker) first would serve the torn state as a
-        # non-retryable error
+        # finding, fuel=57; see IndexKernel._restore_remnants)
         doc = self.meta(ns)
         if not self._has_buckets(ns):
             # empty index (delete-everything): empty result (the raw

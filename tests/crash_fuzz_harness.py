@@ -44,12 +44,15 @@ MUTATORS = ("rename", "delete", "mkdirs", "write_text_atomic")
 class CountdownFS:
     """Proxy over a HadoopFS that raises :class:`SimulatedCrash` on
     the mutating call once ``fuel`` prior mutations have run.
-    ``fuel=None`` counts without killing (the dry run)."""
+    ``fuel=None`` counts without killing (the dry run).  ``paths``
+    records the first argument (the path) of each mutation that ran,
+    so ``paths[i]`` is what boundary ``fuel=i`` kills before."""
 
     def __init__(self, inner, fuel: int | None = None):
         self.inner = inner
         self.fuel = fuel
         self.ops = 0
+        self.paths: list[str] = []
 
     def __getattr__(self, name):
         attr = getattr(self.inner, name)
@@ -60,6 +63,7 @@ class CountdownFS:
                         f"killed before {name} #{self.ops}: "
                         f"{args[0] if args else ''}")
                 self.ops += 1
+                self.paths.append(str(args[0]) if args else "")
                 return attr(*args, **kw)
             return wrapped
         return attr
@@ -117,15 +121,20 @@ def countdown_fs_class():
     return _CountdownHadoopFS
 
 
-def dry_run(make_index, template_root: str, script) -> tuple[int, object]:
+def dry_run(make_index, template_root: str, script,
+            paths: list | None = None) -> tuple[int, object]:
     """Run ``script`` fault-free against a COPY of the template index,
-    counting FS mutations.  Returns (total_mutations, root_of_final_state).
+    counting FS mutations.  Returns (total_mutations, root_of_final_state);
+    ``paths``, when given, is extended with each mutation's path (see
+    :class:`CountdownFS`).
     """
     final_root = template_root + ".final"
     shutil.copytree(template_root, final_root)
     ix = make_index(final_root)
     ix.fs = CountdownFS(ix.fs)
     script(ix)
+    if paths is not None:
+        paths.extend(ix.fs.paths)
     return ix.fs.ops, final_root
 
 

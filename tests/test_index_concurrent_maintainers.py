@@ -204,17 +204,17 @@ def test_hnsw_reshard_marker_fences_midflight_maintainer(
     resharder = HNSWIndex(spark, root)
 
     # Freeze the reshard AT its commit point: skip its own completion
-    # call (the final _restore_shard_remnants(ns), sweep_stagings
+    # call (the final _restore_remnants(ns), sweep_stagings
     # False) so the marker exists but the roll-forward has not run —
     # exactly the ADVICE window.
-    orig_restore = HNSWIndex._restore_shard_remnants
+    orig_restore = HNSWIndex._restore_remnants
 
     def frozen(self, ns, sweep_stagings=False):
         if self is resharder and not sweep_stagings:
             return  # commit point reached; stop before roll-forward
         return orig_restore(self, ns, sweep_stagings)
 
-    monkeypatch.setattr(HNSWIndex, "_restore_shard_remnants", frozen)
+    monkeypatch.setattr(HNSWIndex, "_restore_remnants", frozen)
     _hook_entry_read(monkeypatch, HNSWIndex, hx,
                      lambda: resharder.reshard("e", shards=5))
 
@@ -226,14 +226,14 @@ def test_hnsw_reshard_marker_fences_midflight_maintainer(
     marker = f"{resharder._ns_dir('e')}/_reshard.json"
     assert resharder.fs.exists(marker)
     target = json.loads(resharder.fs.read_text(marker))
-    monkeypatch.setattr(HNSWIndex, "_restore_shard_remnants",
+    monkeypatch.setattr(HNSWIndex, "_restore_remnants",
                         orig_restore)
 
     # recovery completes the reshard; the failed delete left no trace
     # (its pre-CAS shard swaps are overwritten by the whole-dir swap)
     fresh = HNSWIndex(spark, root)
     doc = fresh.meta("e")
-    fresh._restore_shard_remnants("e")
+    fresh._restore_remnants("e")
     doc = fresh.meta("e")
     assert doc["shards"] == 5 and doc["n_vectors"] == 200
     assert int(doc["txn"]) == int(target["txn"]) + 2  # fence +1, commit +1

@@ -6,6 +6,8 @@ recorded in BENCH_NOTES.md); this strided subset keeps the law under
 continuous test at ~4 boundaries per index, always including the
 first and last mutation — the windows targeted by the r10/r11 ADVICE
 fixes sit between verbs, which a stride this dense always straddles.
+The ``_smoke`` twins run in the default marker set with one kill
+each, inside the relayout roll-forward window.
 """
 
 import numpy as np
@@ -36,8 +38,9 @@ def _queries(spark, n=3):
             for r in rows]
 
 
-@pytest.mark.slow  # soak/fuzz: excluded from the default run (see pytest.ini)
-def test_hnswidx_crash_fuzz_strided(spark, tmp_path):
+def _hnsw_case(spark, tmp_path):
+    """The HNSW verb script over a built template: ``(make, template
+    root, script, probe)``."""
     from rados_timestore_spark.hnsw import HNSWIndex
 
     emb = _emb(spark)
@@ -77,21 +80,13 @@ def test_hnswidx_crash_fuzz_strided(spark, tmp_path):
 
     tmpl = str(tmp_path / "tmpl")
     make(tmpl).build("e", a, shards=2, m=8, ef_construction=64)
-    total, final_root = dry_run(make, tmpl, script)
-    want = probe(make(final_root))
-    assert want[0] == len(want[1]) > 0
-    for fuel in _strides(total):
-        work = str(tmp_path / f"k{fuel}")
-        crash_at(make, tmpl, script, fuel, work)
-        got = recover_and_replay(make, work, script, probe)
-        assert got == want, f"fuel={fuel}: {got[0]} != {want[0]}"
+    return make, tmpl, script, probe
 
 
-@pytest.mark.slow  # soak/fuzz: excluded from the default run (see pytest.ini)
-def test_vecidx_crash_fuzz_strided(spark, tmp_path):
-    from rados_timestore_spark.vector_index import (
-        VectorIndex, VectorIndexNotBuilt,
-    )
+def _ivf_case(spark, tmp_path):
+    """The IVF verb script over a built template: ``(make, template
+    root, script, probe)``."""
+    from rados_timestore_spark.vector_index import VectorIndex
 
     emb = _emb(spark)
     a = emb.filter(F.col("vec_id") % 3 == 0)
@@ -139,16 +134,66 @@ def test_vecidx_crash_fuzz_strided(spark, tmp_path):
 
     tmpl = str(tmp_path / "tmpl")
     make(tmpl).build("e", a, k=4)
-    total, final_root = dry_run(make, tmpl, script)
+    return make, tmpl, script, probe
+
+
+def _converges(case, fuels, tmp_path, allowed=()):
+    """Kill ``case``'s script at each boundary ``fuels(paths)`` picks
+    from the dry run's mutated paths, recover, replay, and compare
+    against the no-crash run."""
+    make, tmpl, script, probe = case
+    paths: list[str] = []
+    _total, final_root = dry_run(make, tmpl, script, paths)
     want = probe(make(final_root))
     assert want[0] == len(want[1]) > 0
-    for fuel in _strides(total):
+    for fuel in fuels(paths):
         work = str(tmp_path / f"k{fuel}")
         crash_at(make, tmpl, script, fuel, work)
-        got = recover_and_replay(
-            make, work, script, probe,
-            allowed_cold_errors=(VectorIndexNotBuilt,))
+        got = recover_and_replay(make, work, script, probe,
+                                 allowed_cold_errors=allowed)
         assert got == want, f"fuel={fuel}: {got[0]} != {want[0]}"
+
+
+def _after_marker(marker: str):
+    """The first boundary after the relayout's roll-forward marker is
+    written: the kill lands inside the roll-forward window, so the
+    replay's entry restore must complete the relayout."""
+    def pick(paths):
+        return [next(i for i, p in enumerate(paths)
+                     if p.endswith(f"/{marker}")) + 1]
+    return pick
+
+
+@pytest.mark.slow  # soak/fuzz: excluded from the default run (see pytest.ini)
+def test_hnswidx_crash_fuzz_strided(spark, tmp_path):
+    _converges(_hnsw_case(spark, tmp_path),
+               lambda paths: _strides(len(paths)), tmp_path)
+
+
+@pytest.mark.slow  # soak/fuzz: excluded from the default run (see pytest.ini)
+def test_vecidx_crash_fuzz_strided(spark, tmp_path):
+    from rados_timestore_spark.vector_index import VectorIndexNotBuilt
+
+    _converges(_ivf_case(spark, tmp_path),
+               lambda paths: _strides(len(paths)), tmp_path,
+               allowed=(VectorIndexNotBuilt,))
+
+
+def test_hnswidx_crash_fuzz_smoke(spark, tmp_path):
+    # default-run smoke of the strided sweep: one kill inside the
+    # reshard roll-forward window
+    _converges(_hnsw_case(spark, tmp_path),
+               _after_marker("_reshard.json"), tmp_path)
+
+
+def test_vecidx_crash_fuzz_smoke(spark, tmp_path):
+    # default-run smoke of the strided sweep: one kill inside the
+    # retrain roll-forward window
+    from rados_timestore_spark.vector_index import VectorIndexNotBuilt
+
+    _converges(_ivf_case(spark, tmp_path),
+               _after_marker("_retrain.json"), tmp_path,
+               allowed=(VectorIndexNotBuilt,))
 
 
 def test_vecidx_delete_everything_lifecycle(spark, tmp_path):
