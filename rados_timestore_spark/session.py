@@ -4,6 +4,8 @@ Scale notes (100 TB target): AQE handles runtime coalescing and skew
 joins; shuffle partitions default to the core count locally but should
 be ~2-3x total cluster cores in production; parquet filter pushdown and
 partition pruning carry the read path (SURVEY.md §4).
+Spark's parallel file-listing job is capped at the core count
+(``defaultParallelism``) instead of one task per listed directory.
 """
 
 from __future__ import annotations
@@ -71,6 +73,14 @@ def configure_session(spark: SparkSession) -> SparkSession:
             # Static conf on this build — keep going; only nanosAsLong
             # is load-bearing and it is runtime-settable on Spark 4.
             pass
+    # A read of more than 32 directories (a probe hitting most IVF
+    # buckets, a whole-generation KV or store read) lists them in a
+    # Spark job of one task per directory; only `cores` of those run
+    # at once, so the cap keeps the listing's full width without the
+    # per-task cost of the rest.
+    spark.conf.set(
+        "spark.sql.sources.parallelPartitionDiscovery.parallelism",
+        str(spark.sparkContext.defaultParallelism))
     _ship_package(spark)
     return spark
 

@@ -1731,6 +1731,27 @@ class VectorIndex(IndexKernel):
         (``PartitionFilters`` — pinned by tests/test_plans.py), then
         exact cosine ranks within: per-query cost is ~nprobe/k of the
         corpus regardless of total index size.
+
+        Scoring is ONE ``mapInPandas`` kernel over the pruned scan:
+        the query matrix and a bucket -> probing-queries map ride in
+        its closure, so no query relation is built, broadcast or
+        joined, and each candidate row crosses to Python once
+        instead of once per probing query with that query's vector
+        attached.  Per batch and bucket, :func:`seq_cos_matrix`
+        scores the rows against the queries that probe the bucket
+        (bit-identical to ``_cos_seq``, the :meth:`probe_df`
+        reference); query vectors are rounded to float32 first, as
+        the ``array<float>`` query column of that reference does.
+        The kernel drops ``vec_id == query_id`` and emits only a
+        partial top-``topk`` per query and bucket, ordered
+        (cos DESC, vec_id ASC) the way the window below orders it.
+        NaN rule: a zero-norm vector or query scores NaN, which the
+        pandas -> Arrow boundary turns into NULL, and
+        ``desc("cos")`` ranks NULL after every number; numpy's sort
+        ranks NaN after every number too, so the same rows survive.
+        The global top-k of a query is a subset of the union of its
+        partial top-ks, so the ``row_number`` window over those few
+        rows returns exactly what it returned over every candidate.
         """
         self._restore_remnants(ns)  # BEFORE the meta read (r14 fuzz
         # finding, fuel=57; see IndexKernel._restore_remnants)
@@ -1744,26 +1765,48 @@ class VectorIndex(IndexKernel):
                     "cos double, rank int")
         probe_buckets, all_buckets = self._route_buckets(
             ns, queries, nprobe, doc)
-        qdf = one_slice_df(
-            self.spark,
-            [(int(qid), [float(x) for x in qv], bs)
-             for (qid, qv), bs in zip(queries, probe_buckets)],
-            "query_id long, qe array<float>, probed array<long>",
-        )
         scan = self._pruned_scan(ns, all_buckets, where,
                                  expect_version=int(doc["version"]))
-        from rados_timestore_spark.queries_similarity import _cos_seq
+        dim = doc["dim"]
+        qids = np.array([int(qid) for qid, _qv in queries],
+                        dtype=np.int64)
+        Q = np.array([qv for _qid, qv in queries],
+                     dtype=np.float32).astype(np.float64)
+        by_bucket: dict[int, list[int]] = {}
+        for qi, bs in enumerate(probe_buckets):
+            for b in bs:
+                by_bucket.setdefault(b, []).append(qi)
 
-        hits = (
-            scan.join(
-                F.broadcast(qdf),
-                F.expr("array_contains(probed, bucket)"))
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .select(
-                "query_id", "vec_id",
-                _cos_seq(F.col("embedding"), F.col("qe")).alias("cos"),
-            )
-        )
+        def score(batches):
+            for pdf in batches:
+                if len(pdf) == 0:
+                    continue
+                vid = pdf["vec_id"].to_numpy()
+                bkt = pdf["bucket"].to_numpy()
+                E = np.stack(pdf["embedding"].to_numpy()).astype(
+                    np.float64)
+                out_q, out_v, out_c = [], [], []
+                for b in np.unique(bkt):
+                    rows = np.flatnonzero(bkt == b)
+                    qs = by_bucket[int(b)]
+                    S = seq_cos_matrix(E[rows], Q[qs], dim)
+                    vb = vid[rows]
+                    for j, qi in enumerate(qs):
+                        keep = vb != qids[qi]
+                        v, c = vb[keep], S[keep, j]
+                        # NaN sorts last, as its NULL does below
+                        top = np.lexsort((v, -c))[:topk]
+                        out_q.append(np.full(len(top), qids[qi]))
+                        out_v.append(v[top])
+                        out_c.append(c[top])
+                yield pd.DataFrame({
+                    "query_id": np.concatenate(out_q),
+                    "vec_id": np.concatenate(out_v),
+                    "cos": np.concatenate(out_c),
+                })
+
+        hits = scan.select("vec_id", "bucket", "embedding").mapInPandas(
+            score, "query_id long, vec_id long, cos double")
         from pyspark.sql import Window
 
         w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "vec_id")

@@ -3,16 +3,27 @@ opens only the (epoch, bucket) dirs its addresses hash to, with the
 pinned points schema, so it launches no discovery or footer job.
 
 Each edge case compares the pruned scan with a full-tree
-``spark.read.parquet(pdir)`` under the same filters."""
+``spark.read.parquet(pdir)`` under the same filters.
+
+Reads that do list more than 32 dirs (a whole KV generation, an IVF
+probe over most buckets) run Spark's listing job with at most
+``defaultParallelism`` tasks (``session.configure_session``)."""
 
 import os
 
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from rados_timestore_spark.mutable import MutableKV
-from rados_timestore_spark.session import shuffle_partition_count
+from rados_timestore_spark.session import (
+    configure_session, shuffle_partition_count,
+)
 from rados_timestore_spark.store import TimeStore
+from rados_timestore_spark.vector_index import VectorIndex
+from tests.conftest import SF_DIR
+
+LISTING_CAP = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
 
 COLS = ("address", "time", "value", "payload", "seq")
 
@@ -57,6 +68,20 @@ def _jobs_and_tasks(spark, group, action):
     tasks = sum(tracker.getStageInfo(s).numTasks for s in stages
                 if tracker.getStageInfo(s) is not None)
     return len(jobs), tasks
+
+
+def _listing_tasks(spark, group):
+    """Task count of each file-listing job in ``group`` (run it with
+    :func:`_jobs_and_tasks` first)."""
+    sc = spark.sparkContext
+    status = sc._jsc.sc().statusStore()
+    out = []
+    for job in sc.statusTracker().getJobIdsForGroup(group):
+        data = status.job(job)
+        desc = data.description()
+        if desc.isDefined() and desc.get().startswith("Listing leaf files"):
+            out.append(data.numTasks())
+    return out
 
 
 def test_point_reads_launch_two_jobs(spark, tmp_path):
@@ -218,3 +243,53 @@ def test_non_numeric_shuffle_partitions_falls_back(
         [(2, bytearray(b"b"))], "key long, value binary"),
         lambda new, old: old + new)
     assert kv.lookup(2) == b"ab"
+
+
+def test_listing_cap_is_set_on_own_and_foreign_sessions(spark, tmp_path):
+    cores = str(spark.sparkContext.defaultParallelism)
+    assert spark.conf.get(LISTING_CAP) == cores  # built by get_spark
+    spark.conf.unset(LISTING_CAP)
+    foreign = SparkSession.builder.getOrCreate()
+    assert foreign.conf.get(LISTING_CAP) != cores
+    configure_session(foreign)
+    assert foreign.conf.get(LISTING_CAP) == cores
+
+    # 400 keys fill most of the KV's 128 bucket dirs: without the cap
+    # the enumerate's listing job runs one task per dir
+    store = TimeStore(spark, str(tmp_path / "wh"))
+    kv = MutableKV(store, "kv")
+    kv.insert_bulk(spark.range(0, 400).select(
+        (F.col("id") * 2).alias("key"),
+        F.encode(F.col("id").cast("string"), "utf-8").alias("value")))
+    group = "pin-enumerate"
+    _jobs_and_tasks(spark, group, lambda: kv.enumerate().count())
+    listings = _listing_tasks(spark, group)
+    assert listings and max(listings) <= int(cores), listings
+
+
+def test_probe_runs_one_kernel_and_a_capped_listing(spark, tmp_path):
+    # 16 queries x nprobe 8 on a 64-bucket index probe more than 32
+    # bucket dirs, so the pruned scan's listing runs as a Spark job.
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    vi = VectorIndex(spark, str(tmp_path / "idx"))
+    vi.build("e", emb, k=64)
+    qs = [(r.vec_id, list(r.embedding))
+          for r in emb.filter(F.col("vec_id") < 16).collect()]
+    _, probed = vi._route_buckets("e", qs, 8, vi.meta("e"))
+    assert len(probed) > 32, len(probed)
+    vi.probe("e", qs, topk=10, nprobe=8).collect()  # warm
+
+    got = {}
+
+    def probe():
+        got["df"] = vi.probe("e", qs, topk=10, nprobe=8)
+        got["rows"] = got["df"].collect()
+
+    jobs, _tasks = _jobs_and_tasks(spark, "pin-probe", probe)
+    listings = _listing_tasks(spark, "pin-probe")
+    cores = spark.sparkContext.defaultParallelism
+    assert listings and max(listings) <= cores, listings
+    assert jobs <= 4, jobs
+    plan = got["df"]._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastExchange" not in plan, plan
+    assert len(got["rows"]) == 16 * 10

@@ -265,6 +265,43 @@ def test_probe_df_matches_driver_probe(spark, emb, built):
     assert got == want
 
 
+def test_probe_ranks_nan_cos_like_probe_df(spark, tmp_path):
+    # A zero vector scores cos = NaN against every query (and a zero
+    # query against every vector).  NaN leaves a pandas kernel as
+    # NULL, which desc("cos") ranks last, so the probe kernel's
+    # partial top-k must rank NaN last too: ranking it first would
+    # spend a slot of the zero vector's bucket on it and drop that
+    # bucket's third-best candidate.
+    rng = np.random.default_rng(7)
+    rows = [(i, [float(x) for x in rng.standard_normal(8)])
+            for i in range(40)]
+    # near-copies of vector 0 (the first centroid) fill its bucket,
+    # which also takes the zero vector (argmax of a NaN row is 0)
+    rows += [(50 + i, [float(x) for x in np.array(rows[0][1])
+                       + 0.01 * rng.standard_normal(8)])
+             for i in range(4)]
+    rows.append((100, [0.0] * 8))
+    vi = VectorIndex(spark, str(tmp_path / "nan"))
+    vi.build("z", spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>"), k=4)
+    qs = [(200, [0.0] * 8), (201, rows[0][1])]
+
+    def ranked(df):
+        return {(r.query_id, r.rank): (r.neighbor_id, r.cos)
+                for r in df.collect()}
+
+    want = ranked(vi.probe_df("z", spark.createDataFrame(
+        qs, "query_id long, qe array<float>"), topk=3, nprobe=4))
+    assert [want[(200, r)] for r in (1, 2, 3)] \
+        == [(0, None), (1, None), (2, None)]
+    # premise: query 201's top 3 share the zero vector's bucket
+    bucket = {r.vec_id: r.bucket for r in spark.read.parquet(
+        vi._assignments_dir("z")).collect()}
+    assert {bucket[want[(201, r)][0]] for r in (1, 2, 3)} \
+        == {bucket[100]}
+    assert ranked(vi.probe("z", qs, topk=3, nprobe=4)) == want
+
+
 def test_meta_cols_persist_and_filter_probes(spark, emb, tmp_path):
     # meta_cols ride the assignment table through build AND append, so
     # a filtered probe's predicate evaluates inside the bucket-pruned
