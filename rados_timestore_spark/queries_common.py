@@ -156,27 +156,6 @@ def pin(df: DataFrame) -> DataFrame:
     return df
 
 
-def pin_stats(df: DataFrame) -> DataFrame:
-    """:func:`pin`, then MATERIALIZE the cache eagerly (one count).
-
-    For a pinned relation consumed by several later joins, planning
-    those joins before the cache exists makes the broadcast decision
-    from column-width ESTIMATES — at 100x corpus the minhash shingle
-    table (arrays per row) planned as a broadcast build on both verify
-    joins: a serial driver-side hash-relation build that was the
-    flat-with-cores phase of the scaling probe, and an outright OOM at
-    real scale.  Materializing first lets every downstream join plan
-    against the TRUE cached byte size, so the small-corpus plan keeps
-    its broadcasts and a large corpus demotes to a shuffle join
-    automatically — the same actual-size-over-estimate principle AQE
-    applies at shuffle boundaries.  The count is not an extra pass:
-    the cache had to be built by whichever consumer ran first anyway.
-    """
-    pin(df)
-    df.count()
-    return df
-
-
 def release_pins() -> int:
     """Unpersist every pinned intermediate; returns the count released.
 

@@ -26,8 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
-from rados_timestore_spark.queries_common import (load, load_parallel, pin,
-                                                   pin_stats)
+from rados_timestore_spark.queries_common import load, load_parallel, pin
 from rados_timestore_spark.registry import register
 
 _WORDS_SQL = "regexp_split_to_array(trim(lower(text)), '\\s+')"
@@ -508,44 +507,20 @@ def _mh_sig_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("z.s").alias("s"))
 
 
-def _mh_banded_spark(sig: DataFrame) -> DataFrame:
-    """Long-format ``(doc_id, band, bkey)`` affine-minhash band table
-    from the fused signature column — a pure projection + explode, no
-    shuffle.  Band key = weighted integer sum of 4 consecutive
-    signature rows; bit-identical in DuckDB (``_mh_sql``), which is
-    what makes full LSH oracles possible."""
-    return sig.filter(F.size("s") > 0).select(
-        "doc_id",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    sum(
-                        F.lit(w) * F.element_at(
-                            "s", b * _MH_BAND_ROWS + r + 1)
-                        for r, w in enumerate(_MH_BW[b])
-                    ).alias("bkey"),
-                )
-                for b in range(_MH_HASHES // _MH_BAND_ROWS)
-            ])
-        ).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.bkey")
-
-
 #: Hot-bucket salting threshold for LSH candidate generation: a band
 #: bucket with k > cap members contributes O(k^2) candidate pairs and,
-#: as ONE join bucket, lands that k^2 on a single task — the classic
+#: as ONE shuffle bucket, lands that k^2 on a single task — the classic
 #: skew straggler.  r4 DROPPED such buckets (lossy: pairs sharing only
 #: a hot band were silently never candidates); r5 SALTS them instead
-#: (``_salted_candidates``): members split into g = ceil(k/cap)
+#: (:func:`_lsh_groups`): members split into g = ceil(k/cap)
 #: deterministic sub-groups and every sub-group PAIR becomes its own
-#: join bucket, so all k^2 pairs are still generated but no task sees
-#: more than ~2*cap rows.  Lossless — the cap is now purely a
-#: physical parallelism knob, and the oracle needs no cap mirror.
+#: shuffle group, so all k^2 pairs are still generated but no task
+#: sees more than ~2*cap rows per group.  Lossless — the cap is purely
+#: a physical parallelism knob, and the oracle needs no cap mirror.
 _LSH_BUCKET_CAP = 200
 
-#: Long-format band table as a DuckDB CTE (mirrors
-#: ``_mh_banded_spark``).  No cap filter: salting makes candidate
+#: Long-format band table as a DuckDB CTE (mirrors the band keys of
+#: ``_MH_BKS_SQL``).  No cap filter: salting makes candidate
 #: generation exactly "every pair sharing a band", which is what this
 #: oracle brute-forces.
 _MH_BL_CTES = """
@@ -557,48 +532,136 @@ bl AS (
 )
 """
 
+_MH_BANDS = _MH_HASHES // _MH_BAND_ROWS
 
-def _salted_candidates(bands: DataFrame) -> DataFrame:
-    """Candidate pairs ``(doc_a, doc_b)`` sharing >= 1 (band, bkey) —
-    ALL of them, with hot buckets salted for skew.
+#: The band keys as ONE SQL ``array`` over the signature ``s``: band b
+#: = weighted integer sum of signature rows 4b..4b+3 — bit-identical to
+#: ``_mh_sql``'s ``band{b}``.  One expression instead of a Column tree
+#: per band keeps plan construction off the py4j round-trip path.
+_MH_BKS_SQL = "array(" + ", ".join(
+    " + ".join(f"{w} * s[{b * _MH_BAND_ROWS + r}]"
+               for r, w in enumerate(_MH_BW[b]))
+    for b in range(_MH_BANDS)
+) + ")"
 
-    Each member of a bucket of size k gets sub-group ``gd = doc_id %
-    g`` (g = ceil(k/cap)) and is replicated under every join key
-    ``(band, bkey, min(gd, t), max(gd, t))`` for t in [0, g): any two
-    members a, b then share exactly the key ``(.., min(ga,gb),
-    max(ga,gb))``, so every within-bucket pair survives — triangle
-    partitioning of the k x k self-join into g(g+1)/2 bounded tasks.
-    Buckets at or under the cap have g = 1 (single key, zero
-    replication), so the common case pays nothing."""
-    sizes = bands.groupBy("band", "bkey").agg(F.count("*").alias("k"))
-    salted = (
-        bands.join(sizes, ["band", "bkey"])
-        .withColumn(
-            "g",
-            F.expr(f"(k + {_LSH_BUCKET_CAP - 1}) DIV {_LSH_BUCKET_CAP}"))
-        .withColumn("gd", F.col("doc_id") % F.col("g"))
-        .withColumn("t", F.explode(F.sequence(F.lit(0), F.col("g") - 1)))
-        .select(
-            "doc_id", "band", "bkey",
-            F.least("gd", "t").alias("si"),
-            F.greatest("gd", "t").alias("sj"),
-        )
-    )
+_LSH_GROUP = ["band", "bkey", "si", "sj"]
+
+
+def _lsh_group_pairs(pdf):
+    """Yield the verified pairs (if any) of the COMPLETE groups in
+    ``pdf`` (rows sorted by ``_LSH_GROUP`` then doc_id): see
+    :func:`_lsh_pairs` for the exactly-once rule."""
+    import numpy as np
+    import pandas as pd
+
+    k = pdf[_LSH_GROUP].to_numpy()
+    gid = np.cumsum(np.r_[True, (k[1:] != k[:-1]).any(axis=1)])
+    # every within-group (i, j), i < j, by row distance: groups are
+    # contiguous, so once no group spans distance d none spans d + 1
+    ii, jj = [], []
+    for d in range(1, len(pdf)):
+        i = np.flatnonzero(gid[:-d] == gid[d:])
+        if not len(i):
+            break
+        ii.append(i)
+        jj.append(i + d)
+    if not ii:
+        return
+    i, j = np.concatenate(ii), np.concatenate(jj)
+    gd = pdf["gd"].to_numpy()
+    band = pdf["band"].to_numpy()[i]
+    bks = np.stack(pdf["bks"].to_numpy())
+    own = ((np.minimum(gd[i], gd[j]) == pdf["si"].to_numpy()[i])
+           & (np.maximum(gd[i], gd[j]) == pdf["sj"].to_numpy()[i]))
+    lower = ((bks[i] == bks[j])
+             & (np.arange(_MH_BANDS) < band[:, None])).any(axis=1)
+    keep = own & ~lower
+    i, j = i[keep], j[keep]
+    hs = pdf["hs"].to_numpy()
+    common = np.fromiter(
+        (len(np.intersect1d(hs[a], hs[b], assume_unique=True))
+         for a, b in zip(i, j)), np.int64, len(i))
+    sizes = pdf["hs"].map(len).to_numpy()
+    union_n = sizes[i] + sizes[j] - common
+    ok = common * _TAU_DEN >= _TAU_NUM * union_n
+    if ok.any():
+        doc = pdf["doc_id"].to_numpy()
+        yield pd.DataFrame({"doc_a": doc[i][ok], "doc_b": doc[j][ok],
+                            "common": common[ok], "union_n": union_n[ok]})
+
+
+def _lsh_verify(batches):
+    """``mapInPandas`` kernel of :func:`_lsh_pairs`: streams a sorted
+    partition, holding back the trailing (possibly open) group of each
+    Arrow batch and prepending it to the next, so a worker holds at
+    most one group beyond the current batch."""
+    import numpy as np
+    import pandas as pd
+
+    carry = None
+    for pdf in batches:
+        if carry is not None:
+            pdf = pd.concat([carry, pdf], ignore_index=True)
+        k = pdf[_LSH_GROUP].to_numpy()
+        cut = np.flatnonzero((k[1:] != k[:-1]).any(axis=1))
+        last = cut[-1] + 1 if len(cut) else 0
+        carry = pdf.iloc[last:]
+        if last:
+            yield from _lsh_group_pairs(pdf.iloc[:last])
+    if carry is not None:
+        yield from _lsh_group_pairs(carry)
+
+
+def _lsh_groups(sh: DataFrame) -> DataFrame:
+    """Salted band rows ``(doc_id, hs, bks, band, bkey, gd, si, sj)``:
+    each row carries its verify inputs, keyed by its group
+    ``_LSH_GROUP``.
+
+    A bucket of k > ``_LSH_BUCKET_CAP`` members is salted: each member
+    gets sub-group ``gd = doc_id % g`` (g = ceil(k/cap)) and is
+    replicated under every group ``(band, bkey, min(gd, t), max(gd,
+    t))`` for t in [0, g) — triangle partitioning of the k x k
+    self-join into g(g+1)/2 groups of <= ~2*cap rows.  Only the hot
+    buckets are counted into the broadcast join; every other bucket
+    has g = 1 (one group, zero replication)."""
+    cap = _LSH_BUCKET_CAP
+    bands = sh.filter(F.size("s") > 0).selectExpr(
+        "doc_id", "hs", f"{_MH_BKS_SQL} AS bks"
+    ).selectExpr("doc_id", "hs", "bks", "posexplode(bks) AS (band, bkey)")
+    hot = (bands.groupBy("band", "bkey").agg(F.count("*").alias("k"))
+           .filter(F.col("k") > cap))
+    g = f"coalesce((k + {cap - 1}) DIV {cap}, 1)"
     return (
-        salted.alias("x")
-        .join(
-            salted.alias("y"),
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bkey") == F.col("y.bkey"))
-            & (F.col("x.si") == F.col("y.si"))
-            & (F.col("x.sj") == F.col("y.sj"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(
-            F.col("x.doc_id").alias("doc_a"),
-            F.col("y.doc_id").alias("doc_b"),
-        )
-        .distinct()
+        bands.join(F.broadcast(hot), ["band", "bkey"], "left")
+        .selectExpr("doc_id", "hs", "bks", "band", "bkey",
+                    f"doc_id % {g} AS gd",
+                    f"explode(sequence(0, {g} - 1)) AS t")
+        .selectExpr("doc_id", "hs", "bks", "band", "bkey", "gd",
+                    "least(gd, t) AS si", "greatest(gd, t) AS sj")
+    )
+
+
+def _lsh_pairs(sh: DataFrame) -> DataFrame:
+    """``(doc_a, doc_b, common, union_n)``, doc_a < doc_b: every pair
+    sharing >= 1 (band, bkey) whose integer Jaccard passes
+    ``common * 10 >= 4 * union_n`` — each pair exactly once, verified
+    inside the band-bucket shuffle.
+
+    One hash exchange of :func:`_lsh_groups` on the group, a sort by
+    (group, doc_id), then ONE streaming ``mapInPandas`` pass
+    (:func:`_lsh_verify`).  Within a group a pair counts only in its
+    OWN sub-group pair ``(min gd, max gd) == (si, sj)`` and only in its
+    LOWEST shared band (no equal ``bks[b']`` for b' < band), which
+    makes it exactly-once with no ``distinct`` shuffle and no repeated
+    verify.  The verify is the exact integer test on ``common = |hs_a
+    ∩ hs_b|`` (``hs`` are sets by construction, so this equals
+    ``size(array_intersect)``).
+    """
+    return (
+        _lsh_groups(sh).repartition(*_LSH_GROUP)
+        .sortWithinPartitions(*_LSH_GROUP, "doc_id")
+        .mapInPandas(_lsh_verify,
+                     "doc_a long, doc_b long, common long, union_n long")
     )
 
 
@@ -653,20 +716,14 @@ def _connected_components(spark: SparkSession, edges: DataFrame) -> DataFrame:
             if np.array_equal(nxt, lab):
                 break
             lab = nxt
-        reps = ids[lab]
-        if len(ids) <= 1 << 16:
-            # driver-built result: one pickled slice, not 32 (see
-            # core.one_slice_df); above that the Arrow createDataFrame
-            # ships columnar batches
-            from rados_timestore_spark.core import one_slice_df
-
-            rows = list(zip(ids.tolist(), reps.tolist()))
-            return one_slice_df(spark, rows, "doc_id long, rep long")
+        # Arrow-built (columnar, no Python worker to unpickle a slice)
+        # and broadcast: every caller relabels its full id set with
+        # one left join against these labels
         import pandas as pd
 
-        return spark.createDataFrame(
-            pd.DataFrame({"doc_id": ids, "rep": reps}),
-            "doc_id long, rep long")
+        return F.broadcast(spark.createDataFrame(
+            pd.DataFrame({"doc_id": ids, "rep": ids[lab]}),
+            "doc_id long, rep long"))
 
     # Distributed path: min-id label propagation with TWO-HOP pointer
     # doubling — the star-contraction trick of the large-star/small-star
@@ -768,12 +825,13 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash + banded LSH near-dup clustering, FULL oracle.
 
     shingle -> 16 md5-derived 60-bit minhashes -> 4 bands of 4 ->
-    salted band-bucket equi-join for candidates (hot buckets split
-    into bounded sub-group pairs — lossless, see
-    :func:`_salted_candidates`) -> exact Jaccard verify (integer
-    test, >= 0.4) -> connected components by iterative min-id
-    propagation.  Every stage is an equi-join or aggregate on bounded
-    keys; nothing lands quadratic work on one task.
+    verified pairs from ONE band-bucket shuffle (:func:`_lsh_pairs`:
+    hot buckets split into bounded sub-group pairs — lossless — and
+    each candidate verified once, in its own sub-group pair and lowest
+    shared band, by the exact integer Jaccard test >= 0.4) ->
+    connected components -> one broadcast left join that relabels
+    every document.  Every stage is an equi-join or aggregate on
+    bounded keys; nothing lands quadratic work on one task.
 
     Every stage up to the edge set is bit-identical in DuckDB; the
     oracle then computes the same components via a recursive-CTE
@@ -785,47 +843,21 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     themselves).
     """
     # One fused UDF pass yields shingle sets (verify) AND signatures
-    # (banding); persisted once for all consumers.
-    sh = _mh_sig_docs(spark, sf_dir).transform(pin_stats)
-    bands = _mh_banded_spark(sh).transform(pin)
-    cand = _salted_candidates(bands)
-
-    # Exact verify on candidates only (integer Jaccard >= 0.4).
-    common = (
-        cand.join(
-            sh.select(F.col("doc_id").alias("doc_a"),
-                      F.col("hs").alias("sh_a")), "doc_a")
-        .join(
-            sh.select(F.col("doc_id").alias("doc_b"),
-                      F.col("hs").alias("sh_b")), "doc_b")
-        .select(
-            "doc_a", "doc_b",
-            F.size(F.array_intersect("sh_a", "sh_b")).alias("common"),
-            (F.size("sh_a") + F.size("sh_b")).alias("total"),
-        )
-    )
-    edges = common.filter(
-        F.col("common") * _TAU_DEN
-        >= _TAU_NUM * (F.col("total") - F.col("common"))
-    ).select("doc_a", "doc_b")
+    # (banding); persisted once for the bucket count and the bands.
+    sh = _mh_sig_docs(spark, sf_dir).transform(pin)
+    edges = _lsh_pairs(sh).select("doc_a", "doc_b")
 
     # Connected components over edge ENDPOINTS only (every other doc
-    # is trivially its own singleton cluster — unioned back at the
-    # end).  Hybrid strategy, same spirit as AQE's runtime broadcast
-    # decision: the VERIFIED near-dup edge set is orders of magnitude
-    # smaller than the corpus, so when it fits a hard driver bound we
-    # collect it and run path-compressed union-find (one job instead
-    # of ~4 jobs x rounds); past the bound we fall back to distributed
-    # min-id label propagation, which scales to any edge count.
+    # is trivially its own singleton cluster).  Hybrid strategy, same
+    # spirit as AQE's runtime broadcast decision: the VERIFIED near-dup
+    # edge set is orders of magnitude smaller than the corpus, so when
+    # it fits a hard driver bound we collect it and run union-find
+    # locally (one job instead of ~4 jobs x rounds); past the bound we
+    # fall back to distributed min-id label propagation, which scales
+    # to any edge count.  Either way one left join relabels the corpus.
     labels = _connected_components(spark, edges)
-    singletons = (
-        sh.select("doc_id")
-        .join(labels.select("doc_id"), "doc_id", "left_anti")
-        .withColumn("rep", F.col("doc_id"))
-    )
-    return labels.unionByName(singletons).select(
-        "doc_id", F.col("rep").alias("cluster_rep")
-    )
+    return sh.select("doc_id").join(labels, "doc_id", "left").select(
+        "doc_id", F.coalesce("rep", "doc_id").alias("cluster_rep"))
 
 
 @register(
@@ -848,26 +880,14 @@ WHERE ({_MH_SHARE})
 def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-dup pairs with a FULL oracle: 16 md5-derived
     60-bit minhashes (bit-identical in DuckDB), 4x4 banding, band
-    equi-join candidates, exact Jaccard >= 0.4 verify on the complete
+    candidates verified by exact Jaccard >= 0.4 on the complete
     shingle sets.  Same banding math as dedup_minhash_lsh but every
     stage is cross-engine reproducible, so the driver hash-checks the
-    whole LSH pipeline rather than rows-only.  Candidates come from
-    the salted band join (:func:`_salted_candidates`) so a hot bucket
-    never lands its k^2 pairs on one task."""
-    sh = _mh_sig_docs(spark, sf_dir).transform(pin_stats)
-    bands = _mh_banded_spark(sh)
-    cand = _salted_candidates(bands)
-    j = (
-        cand.join(sh.select(F.col("doc_id").alias("doc_a"),
-                            F.col("hs").alias("sh_a")), "doc_a")
-        .join(sh.select(F.col("doc_id").alias("doc_b"),
-                        F.col("hs").alias("sh_b")), "doc_b")
-    )
-    common = F.size(F.array_intersect("sh_a", "sh_b"))
-    union_n = F.size("sh_a") + F.size("sh_b") - common
-    return j.filter(common * _TAU_DEN >= _TAU_NUM * union_n).select(
-        "doc_a", "doc_b", common.alias("common"), union_n.alias("union_n")
-    )
+    whole LSH pipeline rather than rows-only.  The pairs come from
+    :func:`_lsh_pairs`: one salted band-bucket shuffle, so a hot
+    bucket never lands its k^2 pairs on one task, and every pair is
+    verified and emitted exactly once inside it."""
+    return _lsh_pairs(_mh_sig_docs(spark, sf_dir).transform(pin))
 
 
 # ------------------------------------------- contamination detection
