@@ -244,8 +244,9 @@ def main() -> None:
         is merged ONCE before staging, so every chain is one folded
         row (meta.kv_folded) and the timed merge — a small batch, the
         per-micro-batch shape stream_kv_merges applies — takes the
-        fold-skip fast path: untouched keys pass through JVM-side and
-        only the batch's keys cross the Arrow fold.  The gap between
+        fast path: only the buckets holding batch keys are read,
+        folded and rewritten (one file each), and only the batch's
+        keys pay a per-key Python call.  The gap between
         this row and kv_merge_only is the fast path's win; the
         kv_merge_only row stays the FIRST-merge cost, which must fold
         every raw chain by the differential-law semantics."""

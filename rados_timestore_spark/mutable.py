@@ -26,8 +26,10 @@ one ``applyInPandas`` pass — no per-key round-trips.
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Callable, Iterable
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -39,11 +41,93 @@ from rados_timestore_spark.store import TimeStore
 MUTABLE_BUCKETS = 128  # StoreHelpers.hs:151-154
 
 
+def _chain_runs(batches, key_col: str, fold_group, fold_singles=None):
+    """The :func:`_fold_chain_groups` kernel over one task's key-sorted
+    pandas batches: cut each batch into key runs and fold every closed
+    run."""
+    pend: pd.DataFrame | None = None
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        if pend is not None:
+            pdf = pd.concat([pend, pdf], ignore_index=True)
+            pend = None
+        keys = pdf[key_col].to_numpy()
+        cut = np.nonzero(keys[1:] != keys[:-1])[0] + 1
+        starts = np.concatenate(([0], cut))
+        # hold the final run back: the key may continue in the next
+        # Arrow batch of this partition
+        pend = pdf.iloc[starts[-1]:]
+        ends = starts[1:]
+        starts = starts[:-1]
+        if fold_singles is not None:
+            one = starts[ends - starts == 1]
+            done, bulk = fold_singles(pdf.iloc[one])
+            if len(bulk):
+                yield bulk
+            rest = np.ones(len(starts), dtype=bool)
+            rest[np.searchsorted(starts, one[done])] = False
+            starts, ends = starts[rest], ends[rest]
+        out = []
+        for s, e in zip(starts.tolist(), ends.tolist()):
+            r = fold_group(pdf.iloc[s:e])
+            if r is not None:
+                out.append(r)
+        if out:
+            yield pd.DataFrame(out)
+    if pend is not None and len(pend):
+        r = fold_group(pend)
+        if r is not None:
+            yield pd.DataFrame([r])
+
+
+def _merge_chain(merge: Callable[[bytes, bytes], bytes],
+                 pdf: pd.DataFrame) -> dict | None:
+    """:meth:`MutableKV.merge_into`'s fold of one key: the stored chain
+    (``__src`` 0) then the batch rows (``__src`` 1), pre-sorted by
+    ``(__src, time, seq)``.  The head lands at the stored head version
+    plus the number of batch rows."""
+    acc: bytes | None = None
+    head_t = -1
+    n_batch = 0
+    for src, t, blob in zip(pdf["__src"], pdf["time"], pdf["payload"]):
+        if src == 0:
+            head_t = max(head_t, int(t))
+            if blob is None:  # tombstone: chain restarts
+                acc = None
+                continue
+        else:
+            n_batch += 1
+        b = bytes(blob)
+        acc = b if acc is None else merge(b, acc)
+    if acc is None:  # untouched dead chain: compacted away
+        return None
+    return {"address": int(pdf["address"].iloc[0]),
+            "time": head_t + n_batch,
+            "payload": acc}
+
+
+def _fold_stored_heads(rows: pd.DataFrame,
+                       ) -> tuple[np.ndarray, pd.DataFrame]:
+    """The ``fold_singles`` of :func:`_merge_chain`: a one-row chain
+    that is a stored, live row (``__src`` 0, payload not NULL) folds to
+    itself — ``merge`` is never called, the version stays.  In a
+    steady-state merge these are the untouched keys of the touched
+    buckets, most of the rows the kernel sees."""
+    done = ((rows["__src"].to_numpy() == 0)
+            & rows["payload"].notna().to_numpy())
+    return done, rows.loc[done, ["address", "time", "payload"]]
+
+
 def _fold_chain_groups(df: DataFrame, order_cols: tuple,
                        fold_group: Callable[[pd.DataFrame], dict | None],
                        out_schema: str,
                        key_col: str = "address",
-                       shuffle_cols: tuple | None = None) -> DataFrame:
+                       shuffle_cols: tuple | None = None,
+                       fold_singles: Callable[
+                           [pd.DataFrame],
+                           tuple[np.ndarray, pd.DataFrame]] | None = None,
+                       ) -> DataFrame:
     """Grouped chain fold in ONE ``mapInPandas`` pass: hash-shuffle by
     ``key_col``, sort every partition by ``(key, *order_cols)``, then
     stream the sorted Arrow batches through a single Python worker per
@@ -75,35 +159,14 @@ def _fold_chain_groups(df: DataFrame, order_cols: tuple,
     and it lets the caller write the fold output partitioned by
     layout WITHOUT a second exchange: two operations keyed
     compatibly share one shuffle.
+
+    ``fold_singles`` folds one-row groups in bulk: it receives every
+    closed one-row group of an Arrow batch as one frame and returns
+    ``(mask, out)`` — the rows it folded and their output rows, which
+    must equal what ``fold_group`` would return for each.  The rest
+    still go through ``fold_group``.  Output row order within a batch
+    is then not the key order.
     """
-    import numpy as np
-
-    def run(batches):
-        pend: pd.DataFrame | None = None
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            if pend is not None:
-                pdf = pd.concat([pend, pdf], ignore_index=True)
-                pend = None
-            keys = pdf[key_col].to_numpy()
-            cut = np.nonzero(keys[1:] != keys[:-1])[0] + 1
-            starts = [0, *cut.tolist()]
-            # hold the final run back: the key may continue in the
-            # next Arrow batch of this partition
-            pend = pdf.iloc[starts[-1]:]
-            out = []
-            for s, e in zip(starts[:-1], starts[1:]):
-                r = fold_group(pdf.iloc[s:e])
-                if r is not None:
-                    out.append(r)
-            if out:
-                yield pd.DataFrame(out)
-        if pend is not None and len(pend):
-            r = fold_group(pend)
-            if r is not None:
-                yield pd.DataFrame([r])
-
     if shuffle_cols:
         # layout-keyed fold feeding a pre-shaped partitioned write:
         # pin the partition count so AQE's byte-based coalescing
@@ -115,7 +178,9 @@ def _fold_chain_groups(df: DataFrame, order_cols: tuple,
     else:
         shuffled = df.repartition(key_col)
     shuffled = shuffled.sortWithinPartitions(key_col, *order_cols)
-    return shuffled.mapInPandas(run, out_schema)
+    return shuffled.mapInPandas(
+        partial(_chain_runs, key_col=key_col, fold_group=fold_group,
+                fold_singles=fold_singles), out_schema)
 
 
 class MutableKV:
@@ -378,9 +443,13 @@ class MutableKV:
         # reads as absent, but the version keeps counting so a
         # re-insert lands ABOVE the tombstone (returning None here
         # would restart at version 0 underneath it — the key would
-        # stay deleted forever).
-        df = self.store.read_extended(self.ns, 0, (1 << 62), [addr])
-        row = df.orderBy(F.desc("time"), F.asc("seq")).limit(1).collect()
+        # stay deleted forever).  The raw scan is ordered directly,
+        # without read_extended's first-wins aggregate: the lowest seq
+        # of the highest version IS that version's first-wins row, so
+        # the answer is the same in one job instead of two.
+        df = self.store._scan(self.ns, 0, (1 << 62), [addr], kind=1)
+        row = (df.filter(F.col("kind") == 1)
+               .orderBy(F.desc("time"), F.asc("seq")).limit(1).collect())
         if not row:
             return None
         payload = row[0]["payload"]
@@ -565,9 +634,10 @@ class MutableKV:
         # Steady-state fold skip (r14, VERDICT r13 #6): when the live
         # generation is a prior merge/vacuum's output (every chain
         # exactly one non-tombstone row — _Meta.kv_folded), the fold
-        # of an UNTOUCHED key is the identity, so its row passes
-        # through JVM-side and the Arrow/Python fold machinery handles
-        # only the batch's keys.  This is the dominant term of the
+        # of an UNTOUCHED key is the identity, so no per-key Python
+        # call folds it: the layout-keyed fold emits such rows in bulk
+        # (_fold_stored_heads) and the other paths pass them through
+        # JVM-side (_split_folded).  This is the dominant term of the
         # streaming MERGE case (stream_kv_merges: small per-batch
         # updates against a large folded view).  The flag is read at
         # entry under the serial-maintainer contract; any interleaved
@@ -835,7 +905,16 @@ class MutableKV:
             fold machinery.  The batch key set broadcasts (a merge
             batch is small by the streaming contract; a full-corpus
             batch degrades to the slow path's behavior anyway since
-            everything is then touched)."""
+            everything is then touched).
+
+            Used by the associative path (its output goes through
+            ``shape_rewrite``, so the pass-through rows need no
+            placement) and by the non-associative path when the index
+            is not layout-constant.  The layout-keyed fold does not
+            split: its pass-through rows would reach the writer from
+            their scan tasks, so a bucket would be written by the
+            fold task and by every scan task holding one of its
+            files."""
             if not folded_steady:
                 return df, None
             bkeys = batch.select("address").distinct()
@@ -845,10 +924,13 @@ class MutableKV:
                            "left_semi"), untouched
 
         def _passthrough(untouched: DataFrame) -> DataFrame:
-            # re-derive the physical columns exactly like the fold
-            # output does: for a steady-state row they equal the
-            # stored values (verify()'s placement invariant), and the
-            # recomputation normalizes partition-discovery types
+            # the untouched half of _split_folded, on the paths that
+            # still split (associative, or an index that is not
+            # layout-constant).  Re-derive the physical columns
+            # exactly like the fold output does: for a steady-state
+            # row they equal the stored values (verify()'s placement
+            # invariant), and the recomputation normalizes
+            # partition-discovery types
             return (
                 untouched.select("address", "time", "value", "seq",
                                  "payload")
@@ -918,7 +1000,12 @@ class MutableKV:
             return
 
         def transform(df: DataFrame) -> DataFrame:
-            df, untouched = _split_folded(df)
+            # Layout-keyed, every row of the opened generation (the
+            # touched buckets when pruned) joins the fold exchange, so
+            # each (epoch, bucket) is written by exactly one task: one
+            # file per touched bucket, as pre_shaped promises.
+            df, untouched = ((df, None) if layout_const
+                             else _split_folded(df))
             chain = df.select(
                 "address", "time", "payload", "seq",
                 F.lit(0).alias("__src"))
@@ -939,34 +1026,13 @@ class MutableKV:
                     place_bucket_by_index(idx, "time", "address")
                     .cast("long"))
 
-            def fold(pdf: pd.DataFrame) -> dict | None:
-                # rows arrive pre-sorted by (__src, time, seq) — the
-                # exact order the per-group sort used to establish
-                acc: bytes | None = None
-                head_t = -1
-                n_batch = 0
-                for src, t, blob in zip(
-                        pdf["__src"], pdf["time"], pdf["payload"]):
-                    if src == 0:
-                        head_t = max(head_t, int(t))
-                        if blob is None:  # tombstone: chain restarts
-                            acc = None
-                            continue
-                    else:
-                        n_batch += 1
-                    b = bytes(blob)
-                    acc = b if acc is None else merge(b, acc)
-                if acc is None:  # untouched dead chain: compacted away
-                    return None
-                return {"address": int(pdf["address"].iloc[0]),
-                        "time": head_t + n_batch,
-                        "payload": acc}
-
             out = _fold_chain_groups(
-                allrows, ("__src", "time", "seq"), fold,
+                allrows, ("__src", "time", "seq"),
+                partial(_merge_chain, merge),
                 "address long, time long, payload binary",
                 shuffle_cols=("epoch", "bucket") if layout_const
-                else None)
+                else None,
+                fold_singles=_fold_stored_heads)
             full = (
                 out.withColumn("value", F.lit(None).cast("long"))
                 .withColumn("seq", F.lit(0).cast("long"))

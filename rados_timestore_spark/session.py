@@ -106,15 +106,22 @@ def _ship_package(spark: SparkSession) -> None:
     import ``rados_timestore_spark``.  ``addPyFile`` ships a zip of the
     package to every worker; on a real cluster this is also how the
     engine reaches 1000 executors without a deploy step.
+
+    Once per SparkContext: ``configure_session`` runs on every table
+    load, and a second zip and ``addPyFile`` of the same path would
+    only repeat the work (Spark ignores the re-add), so a context
+    whose added files already hold the zip is left as it is.
     """
     import tempfile
     import zipfile
 
+    name = "rados_timestore_spark_pkg.zip"
+    sc = spark.sparkContext
+    if any(f.rsplit("/", 1)[-1] == name for f in sc.listFiles):
+        return
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     try:
-        zpath = os.path.join(
-            tempfile.gettempdir(), "rados_timestore_spark_pkg.zip"
-        )
+        zpath = os.path.join(tempfile.gettempdir(), name)
         tmp = f"{zpath}.{os.getpid()}.tmp"
         with zipfile.ZipFile(tmp, "w") as zf:
             for base, _dirs, files in os.walk(pkg_dir):
@@ -124,10 +131,10 @@ def _ship_package(spark: SparkSession) -> None:
                         rel = os.path.relpath(full, os.path.dirname(pkg_dir))
                         zf.write(full, rel)
         os.replace(tmp, zpath)
-        spark.sparkContext.addPyFile(zpath)
+        sc.addPyFile(zpath)
     except Exception:
-        # Already added this session, or a read-only tmp — workers that
-        # share the driver's PYTHONPATH (our tests) still work.
+        # A read-only tmp — workers that share the driver's
+        # PYTHONPATH (our tests) still work.
         pass
 
 

@@ -144,11 +144,11 @@ class _Meta:
     #: r13 #6): True = every extended chain in the live generation
     #: holds exactly ONE non-tombstone row (the state merge_into's
     #: whole-view fold and vacuum both produce), so a later merge's
-    #: fold of an UNTOUCHED key is provably the identity and the row
-    #: passes through JVM-side — the Arrow/Python fold then touches
-    #: only batch keys, the dominant streaming-merge term.  Cleared by
-    #: every raw append (write_points) because a multi-row chain's
-    #: fold is NOT the identity; False = the conservative full fold
+    #: fold of an UNTOUCHED key is provably the identity and needs no
+    #: per-key Python call — only batch keys pay one, the dominant
+    #: streaming-merge term.  Cleared by every raw append
+    #: (write_points) because a multi-row chain's fold is NOT the
+    #: identity; False = the conservative full fold
     #: (pre-r14 behavior).  Existing metas deserialize unchanged.
     kv_folded: bool = False
     #: Separate extended-kind index (reference parity: TimeStore.hs:74-90
@@ -1502,12 +1502,17 @@ class TimeStore:
         ``(epoch, bucket)`` layouts qualify; dual-index (``kind``-led)
         layouts fall back to the full rewrite.
 
-        ``pre_shaped`` (r15, guide §2.4): the caller certifies its
-        transform output already keeps each (epoch, bucket) group
-        within a bounded number of tasks (e.g. merge_into's fold
-        shuffles BY the layout columns), so the shape_rewrite exchange
-        is skipped and only the writer's within-partition sort runs —
-        one shuffle for fold+layout instead of two."""
+        ``pre_shaped`` (r15, guide §2.4): the caller certifies that
+        every (epoch, bucket) of its transform output lies wholly in
+        ONE task (merge_into's layout-keyed fold shuffles BY the
+        layout columns and unions nothing in beside it), so the
+        shape_rewrite exchange is skipped and only the writer's
+        within-partition sort runs — one shuffle for fold+layout
+        instead of two, and still one file per written bucket dir.
+        Rows that reach the writer from any other task (e.g. straight
+        from the scan) break the invariant: the bucket then gets one
+        file per such task, and its file count grows with every
+        rewrite."""
         from pyspark.sql import Observation
 
         from rados_timestore_spark.core import kind_col

@@ -95,9 +95,11 @@ def test_point_reads_launch_two_jobs(spark, tmp_path):
         F.encode(F.col("id").cast("string"), "utf-8").alias("value")))
     assert kv.lookup(84) == b"42"  # warm
 
+    # a lookup orders the pruned raw scan directly: one job, no
+    # first-wins aggregate; read_extended keeps its aggregate (2 jobs)
     jobs, tasks = _jobs_and_tasks(spark, "pin-lookup",
                                   lambda: kv.lookup(84))
-    assert jobs == 2 and tasks <= 8, (jobs, tasks)
+    assert jobs == 1 and tasks <= 8, (jobs, tasks)
     got = {}
     jobs, tasks = _jobs_and_tasks(
         spark, "pin-read-extended",
