@@ -635,14 +635,15 @@ class MutableKV:
         # generation is a prior merge/vacuum's output (every chain
         # exactly one non-tombstone row — _Meta.kv_folded), the fold
         # of an UNTOUCHED key is the identity, so no per-key Python
-        # call folds it: the layout-keyed fold emits such rows in bulk
-        # (_fold_stored_heads) and the other paths pass them through
-        # JVM-side (_split_folded).  This is the dominant term of the
-        # streaming MERGE case (stream_kv_merges: small per-batch
-        # updates against a large folded view).  The flag is read at
-        # entry under the serial-maintainer contract; any interleaved
-        # raw append clears it AND fails this merge's CAS flip, so the
-        # fast path can never skip a chain that grew mid-merge.
+        # call folds it: the plain fold emits such rows in bulk
+        # (_fold_stored_heads) and the associative path passes them
+        # through JVM-side (_split_folded).  This is the dominant
+        # term of the streaming MERGE case (stream_kv_merges: small
+        # per-batch updates against a large folded view).  The flag is
+        # read at entry under the serial-maintainer contract; any
+        # interleaved raw append clears it AND fails this merge's CAS
+        # flip, so the fast path can never skip a chain that grew
+        # mid-merge.
         meta0 = (self.store._read_meta(self.ns)
                  if self.store.is_registered(self.ns) else None)
         folded_steady = meta0 is not None and meta0.kv_folded
@@ -897,51 +898,42 @@ class MutableKV:
             self.store.write_points(self.ns, folded)
             return
 
-        def _split_folded(df: DataFrame):
-            """Steady-state split (see folded_steady above): rows of
-            keys ABSENT from the batch pass through JVM-side — their
-            fold is the identity because every chain is one
-            non-tombstone row — and only batch keys' rows enter the
-            fold machinery.  The batch key set broadcasts (a merge
-            batch is small by the streaming contract; a full-corpus
-            batch degrades to the slow path's behavior anyway since
-            everything is then touched).
-
-            Used by the associative path (its output goes through
-            ``shape_rewrite``, so the pass-through rows need no
-            placement) and by the non-associative path when the index
-            is not layout-constant.  The layout-keyed fold does not
-            split: its pass-through rows would reach the writer from
-            their scan tasks, so a bucket would be written by the
-            fold task and by every scan task holding one of its
-            files."""
-            if not folded_steady:
-                return df, None
-            bkeys = batch.select("address").distinct()
-            untouched = df.join(F.broadcast(bkeys), "address",
-                                "left_anti")
-            return df.join(F.broadcast(bkeys), "address",
-                           "left_semi"), untouched
-
-        def _passthrough(untouched: DataFrame) -> DataFrame:
-            # the untouched half of _split_folded, on the paths that
-            # still split (associative, or an index that is not
-            # layout-constant).  Re-derive the physical columns
-            # exactly like the fold output does: for a steady-state
-            # row they equal the stored values (verify()'s placement
-            # invariant), and the recomputation normalizes
-            # partition-discovery types
-            return (
-                untouched.select("address", "time", "value", "seq",
-                                 "payload")
-                .withColumn("kind", F.lit(1))
-                .withColumn("epoch", idx.epoch_col("time"))
-                .withColumn(
-                    "bucket",
-                    place_bucket_by_index(idx, "time", "address"))
-            )
-
         if associative:
+            def _split_folded(df: DataFrame):
+                """Steady-state split (see folded_steady above): rows
+                of keys ABSENT from the batch pass through JVM-side —
+                their fold is the identity because every chain is one
+                non-tombstone row — and only batch keys' rows enter
+                the associative fold.  The batch key set broadcasts (a
+                merge batch is small by the streaming contract; a
+                full-corpus batch degrades to the slow path's behavior
+                anyway since everything is then touched).  The output
+                goes through ``shape_rewrite``, so the pass-through
+                rows need no placement of their own."""
+                if not folded_steady:
+                    return df, None
+                bkeys = batch.select("address").distinct()
+                untouched = df.join(F.broadcast(bkeys), "address",
+                                    "left_anti")
+                return df.join(F.broadcast(bkeys), "address",
+                               "left_semi"), untouched
+
+            def _passthrough(untouched: DataFrame) -> DataFrame:
+                # the untouched half of _split_folded.  Re-derive the
+                # physical columns exactly like the fold output does:
+                # for a steady-state row they equal the stored values
+                # (verify()'s placement invariant), and the
+                # recomputation normalizes partition-discovery types
+                return (
+                    untouched.select("address", "time", "value", "seq",
+                                     "payload")
+                    .withColumn("kind", F.lit(1))
+                    .withColumn("epoch", idx.epoch_col("time"))
+                    .withColumn(
+                        "bucket",
+                        place_bucket_by_index(idx, "time", "address"))
+                )
+
             def transform_assoc(df: DataFrame) -> DataFrame:
                 df, untouched = _split_folded(df)
                 chain = df.select(
@@ -1000,12 +992,11 @@ class MutableKV:
             return
 
         def transform(df: DataFrame) -> DataFrame:
-            # Layout-keyed, every row of the opened generation (the
-            # touched buckets when pruned) joins the fold exchange, so
-            # each (epoch, bucket) is written by exactly one task: one
-            # file per touched bucket, as pre_shaped promises.
-            df, untouched = ((df, None) if layout_const
-                             else _split_folded(df))
+            # Every row of the opened generation (the touched buckets
+            # when pruned) joins the fold: layout-keyed, each (epoch,
+            # bucket) is then written by exactly one task, one file
+            # per touched bucket, as pre_shaped promises.  A stored
+            # one-row chain folds to itself in bulk (_fold_stored_heads).
             chain = df.select(
                 "address", "time", "payload", "seq",
                 F.lit(0).alias("__src"))
@@ -1033,7 +1024,7 @@ class MutableKV:
                 shuffle_cols=("epoch", "bucket") if layout_const
                 else None,
                 fold_singles=_fold_stored_heads)
-            full = (
+            return (
                 out.withColumn("value", F.lit(None).cast("long"))
                 .withColumn("seq", F.lit(0).cast("long"))
                 .withColumn("kind", F.lit(1))
@@ -1042,9 +1033,6 @@ class MutableKV:
                     "bucket",
                     place_bucket_by_index(idx, "time", "address"))
             )
-            if untouched is not None:
-                full = full.unionByName(_passthrough(untouched))
-            return full
 
         self.store._rewrite_generation(
             self.ns, transform, meta_update=_fence,

@@ -84,6 +84,23 @@ def test_steady_merge_launches_at_most_five_jobs(spark, tmp_path):
             for r in kv.enumerate().collect()} == model
 
 
+def test_steady_merge_on_a_rescaled_kv_matches_model(spark, tmp_path):
+    # a second index entry makes placement depend on the version, so
+    # the merge neither prunes nor keys its fold by layout: every row
+    # of the folded view goes through the plain keyed fold
+    model = {}
+    kv = _steady_kv(spark, str(tmp_path / "wh"), model)
+    kv.store.rescale(kv.ns, 32)
+    for tag, keys in (("b", range(2, 4000, 78)), ("c", range(3990, 4100, 2))):
+        _merge(spark, kv, model, keys, tag)
+        meta = kv.store._read_meta(kv.ns)
+        assert meta.kv_folded and len(meta.index.entries) == 2
+    rep = kv.store.verify(kv.ns)
+    assert rep["ok"], rep
+    assert {r.key: bytes(r.value)
+            for r in kv.enumerate().collect()} == model
+
+
 def _random_chains(rng):
     """Rows of ``merge_into``'s fold input, key-sorted like the
     exchange output: every chain kind the kernel can meet."""
