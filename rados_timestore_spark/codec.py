@@ -16,6 +16,11 @@ decoded with one numpy ``frombuffer`` view per run (vectorized header
 decode); the Python loop only advances at extended records, whose
 variable length forces sequential parsing.
 
+:func:`decode_wire_df` emits no ``seq``: ``TimeStore.write_points``
+stamps it in the same stage as the decode, over the points in the
+order they are yielded, so first-wins order follows (partition, blob
+position, in-blob index) with no job to number the blobs first.
+
 A parse error poisons the whole blob (``Either SomeException`` in
 ``groupMixed``, Algorithms.hs:111-127) — we mirror that by raising,
 failing the task.
@@ -27,36 +32,29 @@ import struct
 from typing import Iterable, Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
-POINT_SCHEMA_DDL = (
-    "address long, time long, value long, payload binary, seq long"
-)
-
-
-def _signed(u: int) -> int:
-    """Reinterpret Word64 as signed i64 (Spark LongType); bit patterns
-    — and therefore bucket placement and kind — are preserved."""
-    return u - (1 << 64) if u >= (1 << 63) else u
+POINT_SCHEMA_DDL = "address long, time long, value long, payload binary"
 
 
 def decode_blob_columns(
     blob: bytes,
-) -> tuple[np.ndarray, np.ndarray, list, list]:
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, list]:
     """Decode one packed wire blob into columns
     ``(address, time, value, payload)``.
 
-    ``address``/``time`` are i64 numpy arrays; ``value``/``payload``
-    are Python lists with ``None`` holes (nullable columns).  Simple
-    runs decode via strided numpy views; only extended records take the
-    scalar path.
+    ``address``/``time``/``value`` are i64 numpy arrays (Word64 bit
+    patterns reinterpreted as Spark's signed LongType, so bucket
+    placement and kind are preserved); ``value`` is 0 where the point
+    is extended (address LSB set), which is where it is NULL.
+    ``payload`` is a list with ``None`` at simple points.
+    Simple runs decode via strided numpy views; only extended records
+    take the scalar path.
     """
     off = 0
     n = len(blob)
-    addr_parts: list[np.ndarray] = []
-    time_parts: list[np.ndarray] = []
-    values: list = []
+    parts: list[np.ndarray] = []
     payloads: list = []
     while off < n:
         if off + 24 > n:
@@ -67,9 +65,7 @@ def decode_blob_columns(
         odd = np.nonzero(arr[:, 0] & 1)[0]
         m = int(odd[0]) if odd.size else k
         if m:  # a run of m simple records, fixed 24-byte stride
-            addr_parts.append(arr[:m, 0].astype("<u8").view("<i8"))
-            time_parts.append(arr[:m, 1].astype("<u8").view("<i8"))
-            values.extend(arr[:m, 2].astype("<u8").view("<i8").tolist())
+            parts.append(arr[:m])
             payloads.extend([None] * m)
             off += 24 * m
             # tail shorter than 24B after a clean run is a torn header
@@ -80,20 +76,14 @@ def decode_blob_columns(
         off += 24
         if off + length > n:
             raise ValueError(f"truncated extended payload at offset {off}")
-        addr_parts.append(np.array([_signed(addr_u)], dtype="<i8"))
-        time_parts.append(np.array([_signed(time_u)], dtype="<i8"))
-        values.append(None)
+        parts.append(np.array([[addr_u, time_u, 0]], dtype="<u8"))
         payloads.append(blob[off : off + length])
         off += length
-    if not addr_parts:
-        empty = np.empty(0, dtype="<i8")
-        return empty, empty, [], []
-    return (
-        np.concatenate(addr_parts),
-        np.concatenate(time_parts),
-        values,
-        payloads,
-    )
+    cols = (np.concatenate(parts) if parts
+            else np.empty((0, 3), dtype="<u8")).view("<i8")
+    return (np.ascontiguousarray(cols[:, 0]),
+            np.ascontiguousarray(cols[:, 1]),
+            np.ascontiguousarray(cols[:, 2]), payloads)
 
 
 def decode_blob(blob: bytes, seq_start: int = 0) -> list[tuple]:
@@ -106,9 +96,9 @@ def decode_blob(blob: bytes, seq_start: int = 0) -> list[tuple]:
     """
     addrs, times, values, payloads = decode_blob_columns(blob)
     return [
-        (int(a), int(t), v, p, seq_start + i)
+        (a, t, None if a & 1 else v, p, seq_start + i)
         for i, (a, t, v, p) in enumerate(
-            zip(addrs.tolist(), times.tolist(), values, payloads)
+            zip(addrs.tolist(), times.tolist(), values.tolist(), payloads)
         )
     ]
 
@@ -133,41 +123,27 @@ def encode_points(points: Iterable[tuple]) -> bytes:
     return b"".join(parts)
 
 
-def decode_wire_df(blobs: DataFrame, blob_col: str = "blob",
-                   seq_col: str | None = "seq_base") -> DataFrame:
-    """Decode a DataFrame of wire blobs into a points DataFrame.
+def decode_batches(
+    batches: Iterable[pa.RecordBatch],
+) -> Iterator[pa.RecordBatch]:
+    """Decode the blobs in column 0 of each Arrow batch into one batch
+    of points (:data:`POINT_SCHEMA_DDL`), in (blob position, in-blob
+    index) order; ``value`` is NULL at extended points."""
+    for batch in batches:
+        parts = [decode_blob_columns(b)
+                 for b in batch.column(0).to_pylist()] or [
+            decode_blob_columns(b"")]
+        addr, time, value = (np.concatenate([p[i] for p in parts])
+                             for i in range(3))
+        yield pa.RecordBatch.from_arrays([
+            pa.array(addr), pa.array(time),
+            pa.array(value, mask=(addr & 1).astype(bool)),
+            pa.array([x for p in parts for x in p[3]], pa.binary()),
+        ], names=["address", "time", "value", "payload"])
 
-    ``blobs`` must have a binary column ``blob_col``; if ``seq_col`` is
-    present it seeds each blob's sequence numbers (callers assign
-    disjoint blocks, e.g. ``blob_no << 32``) so cross-blob first-wins
-    order is deterministic.
-    """
-    has_seq = seq_col is not None and seq_col in blobs.columns
-    cols = [blob_col] + ([seq_col] if has_seq else [])
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            frames = []
-            for i in range(len(pdf)):
-                blob = bytes(pdf[blob_col].iloc[i])
-                base = int(pdf[seq_col].iloc[i]) if has_seq else 0
-                addrs, times, values, payloads = decode_blob_columns(blob)
-                frames.append(pd.DataFrame({
-                    "address": addrs,
-                    "time": times,
-                    "value": pd.Series(values, dtype=object),
-                    "payload": pd.Series(payloads, dtype=object),
-                    "seq": np.arange(base, base + len(addrs), dtype="<i8"),
-                }))
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-            else:
-                yield pd.DataFrame({
-                    "address": pd.Series(dtype="int64"),
-                    "time": pd.Series(dtype="int64"),
-                    "value": pd.Series(dtype=object),
-                    "payload": pd.Series(dtype=object),
-                    "seq": pd.Series(dtype="int64"),
-                })
-
-    return blobs.select(*cols).mapInPandas(gen, POINT_SCHEMA_DDL)
+def decode_wire_df(blobs: DataFrame, blob_col: str = "blob") -> DataFrame:
+    """Decode a DataFrame of wire blobs into a points DataFrame, one
+    ``mapInArrow`` (:func:`decode_batches`) over ``blob_col``."""
+    return blobs.select(blob_col).mapInArrow(decode_batches,
+                                             POINT_SCHEMA_DDL)

@@ -1023,7 +1023,7 @@ FROM pts
 def ts_codec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wire codec round-trip (Algorithms.hs:100-186): pack points into
     mixed wire blobs (one per bucket group, executor-side), decode them
-    back with the mapInPandas codec, and aggregate — totals must match
+    back with the mapInArrow codec, and aggregate — totals must match
     the never-encoded relation."""
     from rados_timestore_spark.codec import decode_wire_df, encode_points
 
@@ -1054,7 +1054,7 @@ def ts_codec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     grouped = pts.withColumn("g", F.col("address") % 64)
     blobs = grouped.groupBy("g").applyInPandas(enc, "blob binary")
-    decoded = decode_wire_df(blobs, seq_col=None)
+    decoded = decode_wire_df(blobs)
     return decoded.agg(
         F.count("*").alias("n"),
         F.sum(F.when(F.col("address") % 2 == 0, F.col("value"))).alias(

@@ -54,6 +54,10 @@ DEFAULT_ROLLOVER_BYTES = 4 * 1024 * 1024
 
 _META = "_meta.json"
 
+#: ``monotonically_increasing_id``'s id block per input partition: the
+#: id is ``(partition id << 33) + row offset in the partition``.
+_SEQ_BLOCK = 1 << 33
+
 #: Crashed-FILE remnant name markers: ``.tmp.`` from a writer killed
 #: inside ``write_text_atomic`` before its rename, ``.lock.stale.``
 #: tombs from a stale-breaker killed between rename and delete,
@@ -490,10 +494,17 @@ class TimeStore:
             # previous batch.  No global sort needed; the block size is
             # taken from the batch's actual max id (observed in the
             # same pass as the write) so >2048-partition batches cannot
-            # overflow into the next batch's range.
-            df = df.withColumn(
-                "seq", F.lit(meta.seq_base) + F.monotonically_increasing_id()
-            )
+            # overflow into the next batch's range.  An offset
+            # reaching the partition's id block would spill into the
+            # next partition's ids, so the task fails instead.
+            df = df.withColumn("seq", F.monotonically_increasing_id())
+            in_block = F.assert_true(
+                F.col("seq") - F.spark_partition_id().cast("long")
+                * _SEQ_BLOCK < _SEQ_BLOCK,
+                F.lit(f"write_points: an input partition holds "
+                      f"{_SEQ_BLOCK} points or more"))
+            df = df.withColumn("seq", F.lit(meta.seq_base) + F.col("seq")
+                               + F.coalesce(in_block.cast("long"), F.lit(0)))
 
         routed = df.select(
             "address", "time", "value", "payload", "seq"
@@ -1166,22 +1177,18 @@ class TimeStore:
         """``writeEncoded`` proper (TimeStore.hs:98-137): ingest packed
         wire blobs — the reference's client-facing entry point.
 
-        ``blobs`` rows each hold one mixed wire blob (BinaryType).  The
-        blobs are decoded executor-side (numpy-vectorized codec,
-        Arrow-batched) into points and run through the standard
-        :meth:`write_points` pipeline.  Cross-blob first-wins order is
-        made deterministic by seeding each blob's sequence numbers from
-        a disjoint block (blob ordinal << 32 above the namespace's
-        seq_base), ordinals following (partition, position) ingest
-        order — the reference gets the same property from append order.
+        ``blobs`` rows each hold one mixed wire blob (BinaryType).  One
+        ``mapInArrow`` decodes them executor-side (numpy-vectorized
+        codec) and the points run the standard :meth:`write_points`
+        pipeline: its seq stamp runs in the decode's stage, over the
+        points in the order they are decoded, so cross-blob first-wins
+        order follows (partition, blob position, in-blob index) ingest
+        order with no job to number the blobs first (the reference gets
+        the same property from append order).
         """
         from rados_timestore_spark.codec import decode_wire_df
 
-        meta = self._read_meta(ns)
-        seeded = _seed_blob_ordinals(blobs, blob_col, meta.seq_base)
-        points = decode_wire_df(seeded, blob_col=blob_col,
-                                seq_col="seq_base")
-        self.write_points(ns, points)
+        self.write_points(ns, decode_wire_df(blobs, blob_col))
 
     # --------------------------------------------------- chunked reads
 
@@ -1936,77 +1943,6 @@ class TimeStore:
             actions.append("compact")
         return {"action": "+".join(actions) if actions else "none",
                 "stats": st}
-
-
-def _seed_blob_ordinals(blobs: DataFrame, blob_col: str,
-                        seq_base: int) -> DataFrame:
-    """Stamp each wire blob with a disjoint seq block — WITHOUT a
-    global window.
-
-    The obvious ``row_number().over(Window.orderBy(...))`` funnels the
-    whole ingest batch through one task (an ``Exchange
-    SinglePartition``) — a chokepoint/OOM on the client-facing ingest
-    entry point.  Instead we compute dense blob ordinals the way RDD
-    ``zipWithIndex`` does, but staying in DataFrame/Arrow land:
-
-    1. one column-pruned counting job collects per-partition row
-       counts (tiny: one row per partition on the driver);
-    2. cumulative offsets are broadcast-joined back on
-       ``spark_partition_id()``;
-    3. the within-partition position is recovered from
-       ``monotonically_increasing_id()`` (= ``pid << 33 | pos``), so
-       ``ordinal = offset[pid] + pos`` — unique, dense, and in
-       (partition, position) ingest order, with no shuffle of blob
-       bytes and no single-partition exchange.
-
-    Blocks are ``ordinal << 32`` wide: up to 2^31 blobs per batch and
-    2^32 points per blob before overflow — far beyond any real batch.
-
-    The counting job and the stamping job MUST observe the same
-    partitioning, so the input is pinned with ``localCheckpoint``
-    first: without it a shuffled/AQE-planned source could present
-    different partition ids to the two jobs, and an id missing from
-    ``off_df`` would silently drop those blobs (or collide seq
-    blocks).  Belt-and-braces, the join is a LEFT join with a
-    fail-fast guard — an unmatched partition id raises instead of
-    vanishing.
-    """
-    spark = blobs.sparkSession
-    blobs = blobs.localCheckpoint(eager=True)
-    pid = F.spark_partition_id().cast("long")
-    pos = F.monotonically_increasing_id() - (pid * F.lit(1 << 33))
-    counts = (
-        blobs.select(F.spark_partition_id().alias("pid"))
-        .groupBy("pid").count().collect()
-    )
-    offsets, running = [], 0
-    for row in sorted(counts, key=lambda r: r["pid"]):
-        offsets.append((row["pid"], running))
-        running += row["count"]
-    off_df = one_slice_df(
-        spark, offsets or [(0, 0)], "pid long, _blob_off long"
-    )
-    # assert_true yields NULL when the guard holds and raises when it
-    # doesn't; folding it into the ordinal keeps it un-prunable.
-    guard = F.coalesce(
-        F.assert_true(
-            F.col("_blob_off").isNotNull(),
-            F.lit("_seed_blob_ordinals: runtime partition id absent "
-                  "from the counting job (nondeterministic input "
-                  "partitioning) — refusing to drop blobs"),
-        ).cast("long"),
-        F.lit(0),
-    )
-    ordinal = F.col("_blob_off") + F.col("_blob_pos") + guard
-    return (
-        blobs.withColumn("pid", pid)
-        .withColumn("_blob_pos", pos)
-        .join(F.broadcast(off_df), "pid", "left")
-        .select(
-            F.col(blob_col),
-            (F.lit(seq_base) + ordinal * F.lit(1 << 32)).alias("seq_base"),
-        )
-    )
 
 
 def _dedup_agg(df: DataFrame, payload_cols: tuple[str, ...]) -> DataFrame:

@@ -5,7 +5,11 @@ import random
 
 import pytest
 
-from rados_timestore_spark.codec import decode_blob, decode_wire_df, encode_points
+import pyarrow as pa
+
+from rados_timestore_spark.codec import (
+    decode_batches, decode_blob, decode_wire_df, encode_points,
+)
 
 
 def test_simple_point_roundtrip():
@@ -63,21 +67,98 @@ def test_fuzzy_mixed_roundtrip():
 
 
 def test_decode_wire_df(spark):
+    # points in (partition, blob position, in-blob index) order, no seq
+    # (write_points stamps it)
     blobs = [
-        (0, encode_points([(0, 1, 10, None), (2, 2, 20, None)])),
-        (1 << 32, encode_points([(1, 3, None, b"hai")])),
+        encode_points([(0, 1, 10, None), (2, 2, 20, None)]),  # partition 0
+        encode_points([(1, 3, None, b"hai")]),                # partition 1
+        encode_points([(4, 4, 40, None), (5, 5, None, b"")]),
     ]
-    df = spark.createDataFrame(
-        [(s, bytearray(b)) for s, b in blobs], "seq_base long, blob binary")
+    df = spark.sparkContext.parallelize(
+        [(bytearray(b),) for b in blobs], 2).toDF("blob binary")
     got = decode_wire_df(df).collect()
-    rows = sorted([(r.address, r.time, r.value,
-                    None if r.payload is None else bytes(r.payload), r.seq)
-                   for r in got])
-    assert rows == [
-        (0, 1, 10, None, 0),
-        (1, 3, None, b"hai", 1 << 32),
-        (2, 2, 20, None, 1),
+    assert [(r.address, r.time, r.value,
+             None if r.payload is None else bytes(r.payload))
+            for r in got] == [
+        (0, 1, 10, None),
+        (2, 2, 20, None),
+        (1, 3, None, b"hai"),
+        (4, 4, 40, None),
+        (5, 5, None, b""),
     ]
+
+
+def _blob_batch(*blobs):
+    return pa.RecordBatch.from_arrays([pa.array(blobs, pa.binary())],
+                                      names=["blob"])
+
+
+def _decoded(batches):
+    out = pa.Table.from_batches(list(decode_batches(batches)))
+    return list(zip(*(out.column(c).to_pylist() for c in out.column_names)))
+
+
+def test_decode_batches_without_spark():
+    a = encode_points([(2, 1, 5, None), (3, 1, None, b"x")])
+    b = encode_points([(4, 2, -6, None)])
+    assert _decoded([_blob_batch(a, b""), _blob_batch(), _blob_batch(b)]) \
+        == [(2, 1, 5, None), (3, 1, None, b"x"), (4, 2, -6, None)]
+    torn = encode_points([(3, 1, None, b"hello")])[:-1]
+    with pytest.raises(ValueError):
+        _decoded([_blob_batch(a), _blob_batch(torn)])
+
+
+def _random_blobs(rng, n_blobs, keys):
+    """``n_blobs`` mixed blobs drawing (address, time) from ``keys``,
+    so keys repeat inside a blob and across blobs."""
+    out = []
+    for _ in range(n_blobs):
+        pts = []
+        for _ in range(rng.randrange(1, 12)):
+            a, t = rng.choice(keys)
+            pts.append((a, t, None, rng.randbytes(rng.randrange(0, 9)))
+                       if a & 1 else (a, t, rng.randrange(-(1 << 62), 1 << 62),
+                                      None))
+        out.append(pts)
+    return out
+
+
+def test_write_encoded_matches_write_points_and_first_wins(spark, tmp_path):
+    # Differential: random mixed blobs over 3 input partitions, written
+    # once as blobs and once as the same points in the same order, must
+    # read back as the first-wins model in (partition, position,
+    # in-blob) order; a second batch loses every key to the first.
+    from rados_timestore_spark.store import TimeStore
+
+    rng = random.Random(9)
+    addrs = [2, 3, 6, 11, -2, -(1 << 62) | 1]
+    keys = [(a, t) for a in addrs for t in range(5)]
+    store = TimeStore(spark, str(tmp_path / "w"))
+    store.register_namespace("E", buckets=4)
+    store.register_namespace("P", buckets=4)
+    model = {}
+    for batch in range(2):
+        blobs = _random_blobs(rng, 9, keys)
+        # parallelize slices contiguously: blobs 0-2, 3-5, 6-8
+        in_blob = any(len({p[:2] for p in b}) < len(b) for b in blobs)
+        across = {p[:2] for b in blobs[:3] for p in b} \
+            & {p[:2] for b in blobs[6:] for p in b}
+        assert in_blob and across
+        flat = [p for b in blobs for p in b]
+        for a, t, v, p in flat:
+            model.setdefault((a, t), v if p is None else p)
+        store.write_encoded("E", spark.sparkContext.parallelize(
+            [(bytearray(encode_points(b)),) for b in blobs], 3
+        ).toDF("blob binary"))
+        store.write_points("P", spark.sparkContext.parallelize(flat, 3).toDF(
+            "address long, time long, value long, payload binary"))
+        for ns in ("E", "P"):
+            simple = store.read_simple(ns, 0, 10, addrs, global_order=True)
+            ext = store.read_extended(ns, 0, 10, addrs, global_order=True)
+            got = {(r.address, r.time): r.value for r in simple.collect()}
+            got.update({(r.address, r.time): bytes(r.payload)
+                        for r in ext.collect()})
+            assert got == model, (batch, ns)
 
 
 def test_write_encoded_end_to_end(spark, tmp_path):

@@ -24,7 +24,7 @@ from hypothesis import strategies as st
 from rados_timestore_spark.store import TimeStore
 
 # Addresses exercise the full Word64 domain, reinterpreted as i64
-# (bit patterns preserved — codec._signed semantics).
+# (bit patterns preserved, as the codec decodes them).
 _ADDRS = st.sampled_from(
     # -2 is Word64 2^64-2; -(1<<62) is 3*2^62: the high half of the
     # Word64 domain arrives as negative i64 (bit patterns preserved).

@@ -345,21 +345,112 @@ def test_meta_recovers_from_backup_after_crash(store):
     assert [(r.address, r.time, r.value) for r in got] == [(2, 5, 50)]
 
 
-def test_blob_ordinals_dense_without_global_window(spark):
-    # write_encoded's seq seeding must not funnel the batch through a
-    # single task (ADVICE r2): the plan may not contain an Exchange
-    # SinglePartition, and ordinals must still be dense and unique in
-    # (partition, position) order.
-    from rados_timestore_spark.store import _seed_blob_ordinals
+def _encoded_batch(spark, sizes, parts):
+    """Blobs of ``sizes`` points over ``parts`` input partitions, in
+    order; point k of blob b is (2 + 2 * (b % 4), 1000 * b + k)."""
+    from rados_timestore_spark.codec import encode_points
 
-    blobs = spark.createDataFrame(
-        [(bytearray([i]),) for i in range(10)], "blob binary"
-    ).repartition(4)
-    seeded = _seed_blob_ordinals(blobs, "blob", seq_base=7)
-    plan = seeded._jdf.queryExecution().executedPlan().toString()
-    assert "SinglePartition" not in plan
-    bases = sorted(r.seq_base for r in seeded.collect())
-    assert bases == [7 + i * (1 << 32) for i in range(10)]
+    pts = [[(2 + 2 * (b % 4), 1000 * b + k, 7, None) for k in range(n)]
+           for b, n in enumerate(sizes)]
+    blobs = spark.sparkContext.parallelize(
+        [(bytearray(encode_points(p)),) for p in pts], parts
+    ).toDF("blob binary")
+    return blobs, pts
+
+
+def test_write_encoded_one_pass(spark, tmp_path):
+    # write_encoded stamps seqs in its decode stage: no global window
+    # (an Exchange SinglePartition would funnel the batch through one
+    # task), seqs unique and in (partition, position, in-blob) order,
+    # and no more Spark jobs than write_points of the same points (2:
+    # the shaping exchange and the write).
+    from rados_timestore_spark.store import _SEQ_BLOCK, TimeStore
+    from tests.test_targeted_open import _jobs_and_tasks
+
+    store = TimeStore(spark, str(tmp_path / "w"))
+    store.register_namespace("E", buckets=4)
+    store.register_namespace("P", buckets=4)
+    sizes = [3, 1, 4, 2, 5, 2, 1]
+    blobs, pts = _encoded_batch(spark, sizes, 3)
+    enc_jobs, _ = _jobs_and_tasks(
+        spark, "pin-write-encoded", lambda: store.write_encoded("E", blobs))
+    # the executed plans of those jobs (the UI store keeps only the most
+    # recent executions, so look among the last few)
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(
+        "pin-write-encoded")
+    status = spark._jsparkSession.sharedState().statusStore()
+    n = status.executionsCount()
+    recent = status.executionsList(max(n - 20, 0), min(n, 20))
+    plans = [e.physicalPlanDescription()
+             for e in (recent.apply(i) for i in range(recent.size()))
+             if any(e.jobs().contains(j) for j in jobs)]
+    assert plans and not any("SinglePartition" in p for p in plans)
+    flat = spark.createDataFrame([p[:3] for blob in pts for p in blob],
+                                 "address long, time long, value long")
+    pts_jobs, _ = _jobs_and_tasks(
+        spark, "pin-write-points", lambda: store.write_points("P", flat))
+    assert enc_jobs <= pts_jobs == 2, (enc_jobs, pts_jobs)
+
+    # parallelize slices the blobs contiguously: 2, 2 and 3 per partition
+    expect, pid_of = {}, [0, 0, 1, 1, 2, 2, 2]
+    offset = [0, 0, 0]
+    for b, blob in enumerate(pts):
+        pid = pid_of[b]
+        for (_, t, _, _) in blob:
+            expect[t] = pid * _SEQ_BLOCK + offset[pid]
+            offset[pid] += 1
+    got = {r.time: r.seq for r in
+           spark.read.parquet(store._points_dir("E")).collect()}
+    assert got == expect
+    assert len(set(got.values())) == sum(sizes)
+
+
+def test_write_points_refuses_to_overflow_a_partitions_seq_block(
+        spark, tmp_path, monkeypatch):
+    # A partition whose row offset reaches its id block would stamp the
+    # next partition's seqs: the write fails and leaves nothing behind.
+    # The block is shrunk to 4 ids, so only partition 0 is in range.
+    import rados_timestore_spark.store as store_mod
+
+    store = store_mod.TimeStore(spark, str(tmp_path / "w"))
+    store.register_namespace("O", buckets=4)
+    monkeypatch.setattr(store_mod, "_SEQ_BLOCK", 4)
+    for n in (4, 5):
+        blobs, _ = _encoded_batch(spark, [n], 1)
+        if n == 4:  # exactly filling the block is fine
+            store.write_encoded("O", blobs)
+            continue
+        with pytest.raises(Exception, match="points or more"):
+            store.write_encoded("O", blobs)
+    got = store.read_simple("O", 0, 1 << 20, [2]).collect()
+    assert sorted(r.time for r in got) == [0, 1, 2, 3]
+    assert store._read_meta("O").seq_base == 4
+
+
+def test_write_encoded_fences_its_own_meta_read(spark, tmp_path):
+    # write_encoded stamps seqs from the seq_base it read, so its meta
+    # flip must CAS against that same read: a writer committing right
+    # after it makes the flip fail, not pass against a second read.
+    from rados_timestore_spark.store import ConcurrentWriterError, TimeStore
+
+    store = TimeStore(spark, str(tmp_path / "w"))
+    store.register_namespace("R", buckets=4)
+    other = TimeStore(spark, str(tmp_path / "w"))
+    blobs, _ = _encoded_batch(spark, [2, 3], 2)
+    real_read = store._read_meta
+    fired = []
+
+    def read_then_interleave(ns):
+        meta = real_read(ns)
+        if not fired:
+            fired.append(ns)
+            _write(other, ns, [(2, 5, 50)])
+        return meta
+
+    store._read_meta = read_then_interleave
+    with pytest.raises(ConcurrentWriterError):
+        store.write_encoded("R", blobs)
+    assert fired == ["R"]
 
 
 def test_viewfs_scheme_full_lifecycle(spark, tmp_path):
