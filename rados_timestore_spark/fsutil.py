@@ -118,7 +118,7 @@ class HadoopFS:
         or ``p.bak``) survives; :meth:`exists_or_recover` restores from
         the backup when the primary is missing (plain :meth:`read_text`
         does NOT recover — callers must check :meth:`exists_or_recover`
-        first, as ``Store._read_meta`` does).  A crash in the middle
+        first, as :func:`read_meta` does).  A crash in the middle
         can lose the *newest* write (the backup holds the previous
         version) but never the document.
         """
@@ -165,7 +165,7 @@ class HadoopFS:
             # recovered the file or a writer recreated it between the
             # two exists checks — re-check rather than reporting a
             # spurious miss (which would surface as a bogus
-            # NamespaceNotRegistered in _read_meta).
+            # NamespaceNotRegistered from read_meta).
             return bool(self.fs.exists(self._path(p)))
         return False
 
@@ -536,20 +536,35 @@ def flip_lock(fs: HadoopFS, lock: str, what: str,
               timeout: float = 30.0, stale_after: float = 60.0,
               err_cls: type = ConcurrentMaintainerError):
     """Best-effort exclusive marker around a metadata CAS
-    read->write window — the store's ``TimeStore._flip_lock``
-    extracted so the persisted ANN indexes share one implementation
-    (VERDICT r12 #4).  Semantics (see the store docstring for the
-    full design notes, store.py ``_flip_lock``):
+    read->write window (the reference pairs its index CAS re-check
+    with advisory locks, StoreHelpers.hs:214-219 / TimeStore.hs:98-137);
+    the one lock of the store and both persisted ANN indexes.
 
-    * create-exclusive is atomic where the FS provides it; on object
-      stores it is best-effort, which is why callers pair the lock
-      with a txn CAS re-check — the lock narrows the window, the CAS
-      detects whatever slips through;
-    * a marker older than ``stale_after`` seconds is a crashed holder,
-      broken via RENAME-then-delete so only one waiter wins the break;
-    * release verifies OWNERSHIP (unique pid+thread+nonce token) so a
-      holder that stalls past the staleness horizon cannot delete a
-      legitimate successor's fresh lock.
+    * Create-exclusive is atomic where the FS provides it
+      (:meth:`HadoopFS.create_exclusive`: O_CREAT|O_EXCL for local
+      paths, namenode create for HDFS), so there two writers can never
+      both be inside the window.  On object stores it is best-effort
+      (S3 has no atomic create-if-absent), which is why callers pair
+      the lock with a txn CAS re-check (:func:`meta_fence`): the lock
+      narrows the window, the CAS detects whatever slips through.
+    * A marker older than ``stale_after`` seconds is a crashed holder,
+      broken via RENAME-then-delete so only ONE waiter wins the break
+      (r7 review: a blind delete let two waiters each
+      delete-and-recreate, putting both inside the window).
+    * Release verifies OWNERSHIP (r8 review): each acquire writes a
+      unique token (pid+thread+nonce; pid alone collides across
+      threads) and the release deletes the lock only while the stored
+      content still matches.  Without it, a holder that stalls past
+      ``stale_after`` (GC pause, slow py4j call) would, on wake,
+      delete the fresh lock a legitimate stale-breaker had since
+      created, letting a third writer into the window.  The content
+      write after the atomic create is not atomic, but every mismatch
+      direction is safe: an empty or partial read skips the delete
+      (the stale-break reclaims a crashed mid-acquire marker), and a
+      partial read of one fixed-length token never equals another
+      full token.  The read->delete instant left is the one
+      unavoidable TOCTOU; it needs a second 60 s stall inside a
+      microsecond window.
     """
     import os
     import random
@@ -614,34 +629,88 @@ def flip_lock(fs: HadoopFS, lock: str, what: str,
             pass  # releasing best-effort; stale-break cleans up
 
 
-def cas_commit_meta(fs: HadoopFS, meta_path: str, lock: str,
-                    what: str, doc: dict) -> None:
-    """CAS-fenced metadata commit shared by the persisted ANN indexes
-    (VERDICT r12 #4; one implementation so the txn/CAS protocol
-    cannot drift between them — r13 review finding): under the flip
-    lock, re-read the stored document's ``txn``, refuse on mismatch
-    with :class:`ConcurrentMaintainerError`, bump, write.
+def read_meta(fs: HadoopFS, path: str, missing: Exception | None,
+              parse=None):
+    """The one reader of a meta document (the store's ``_meta.json``,
+    both ANN indexes' metas).  :meth:`HadoopFS.exists_or_recover`
+    first restores the document from its ``.bak`` when a
+    :meth:`HadoopFS.write_text_atomic` was killed between its two
+    renames; an absent document raises ``missing``, or returns None
+    when ``missing`` is None.  The open itself can still race a live
+    replace (the primary is briefly renamed aside between the exists
+    check and the read); that window is transient by construction, so
+    a bounded re-check-and-retry is exact.  ``parse`` maps the decoded
+    JSON (a KeyError/TypeError from it on a half-replaced document is
+    the same transient)."""
+    import json
+    import time
 
-    ``doc`` must carry the ``txn`` the caller READ at verb entry, so
-    the CAS window spans the verb's whole run.  Documents persisted
-    before the fence existed have no ``txn`` — both sides then
-    default to 0 and the first fenced commit starts the counter."""
+    last_exc: Exception | None = None
+    for _ in range(20):
+        if not fs.exists_or_recover(path):
+            if missing is None:
+                return None
+            raise missing
+        try:
+            doc = json.loads(fs.read_text(path))
+            return doc if parse is None else parse(doc)
+        except (ValueError, KeyError, TypeError, FileNotFoundError) as exc:
+            # ValueError: a partial document (JSONDecodeError);
+            # FileNotFoundError: the vanished primary as a Python FS
+            # layer reports it (no JVM class name in str, ADVICE r8)
+            last_exc = exc
+        except Exception as exc:
+            # only a vanished primary is part of the replace window;
+            # permission errors, py4j failures and other genuine I/O
+            # problems surface at once with their root cause (ADVICE r7)
+            if "FileNotFoundException" not in str(exc):
+                raise
+            last_exc = exc
+        time.sleep(0.01)
+    raise IOError(f"{path} unreadable after 20 attempts "
+                  f"(writer replace storm?)") from last_exc
+
+
+@contextmanager
+def meta_fence(fs: HadoopFS, path: str, lock: str, what: str, txn: int,
+               err_cls: type = ConcurrentMaintainerError):
+    """The CAS re-check of every meta commit (the reference's re-check
+    under an advisory lock, StoreHelpers.hs:214-219): hold the flip
+    lock, re-read the stored document and raise ``err_cls`` unless it
+    still carries ``txn``; the body then writes under the same hold.
+    Yields the stored document (None when absent).
+
+    ``txn`` is the one the caller read AT VERB ENTRY, so the CAS window
+    spans the verb's whole run: its Spark jobs run for seconds between
+    that read and this check, and every gate the verb computed from
+    its entry read is fenced with it.  The lock serializes the
+    re-check->write window itself; the txn check is the backstop for
+    interleavings wider than the window and for filesystems whose
+    create-exclusive is not atomic.  A document without a ``txn`` (an
+    index persisted before the fence existed) or none at all (a first
+    build) reads as txn 0."""
+    with flip_lock(fs, lock, what=what, err_cls=err_cls):
+        stored = read_meta(fs, path, None)
+        stored_txn = 0 if stored is None else int(stored.get("txn", 0))
+        if stored_txn != int(txn):
+            raise err_cls(
+                f"{what}: meta txn advanced {int(txn)} -> {stored_txn} "
+                f"since this verb read it (concurrent writer detected); "
+                f"re-read and re-run")
+        yield stored
+
+
+def cas_commit_meta(fs: HadoopFS, path: str, lock: str, what: str,
+                    doc: dict, txn: int,
+                    err_cls: type = ConcurrentMaintainerError) -> None:
+    """Commit ``doc`` as the meta document at ``path`` iff the stored
+    one still carries the caller's entry-read ``txn``
+    (:func:`meta_fence`), stamping ``txn + 1``."""
     import json
 
-    with flip_lock(fs, lock, what=what):
-        expected = int(doc.get("txn", 0))
-        if fs.exists(meta_path):
-            stored = int(json.loads(
-                fs.read_text(meta_path)).get("txn", 0))
-            if stored != expected:
-                raise ConcurrentMaintainerError(
-                    f"{what}: meta txn advanced {expected} -> {stored} "
-                    f"since this verb read it (concurrent maintainer "
-                    f"detected); the index verbs are "
-                    f"serial-by-contract — re-run the verb"
-                )
-        doc["txn"] = expected + 1
-        fs.write_text_atomic(meta_path, json.dumps(doc))
+    with meta_fence(fs, path, lock, what, txn, err_cls):
+        doc["txn"] = int(txn) + 1
+        fs.write_text_atomic(path, json.dumps(doc))
 
 
 def maintain_plan(n: int, parts: int, bound: int, skewed: bool,
@@ -723,10 +792,10 @@ class IndexKernel:
     commits through :meth:`_commit_meta` (or, for the relayout verb,
     :meth:`_commit_relayout`) last.
 
-    Every FS mutation here is a single ``self.fs`` call — never a
-    composite ``HadoopFS`` verb — so a proxy in front of ``fs`` (the
-    crash fuzz's countdown, ``tests/crash_fuzz_harness.py``) sees each
-    rename and delete of a swap as its own kill point."""
+    Every swap step here is a single ``self.fs`` call, so a countdown
+    FS (``tests/crash_fuzz_harness.py``) sees each rename and delete
+    of a swap, and of a meta document's replace, as its own kill
+    point."""
 
     #: meta document under the namespace dir (the commit marker)
     META: str
@@ -765,36 +834,28 @@ class IndexKernel:
 
     # ---------------------------------------------------------- meta
 
-    def meta(self, ns: str) -> dict:
-        import json
+    def _meta_path(self, ns: str) -> str:
+        return f"{self._ns_dir(ns)}/{self.META}"
 
-        path = f"{self._ns_dir(ns)}/{self.META}"
-        if not self.fs.exists(path):
-            raise self.NOT_BUILT(
-                f"{self.WHAT} {ns!r} has no {self.META} under "
-                f"{self.root} — run build() first")
-        return json.loads(self.fs.read_text(path))
+    def meta(self, ns: str) -> dict:
+        return read_meta(self.fs, self._meta_path(ns), self.NOT_BUILT(
+            f"{self.WHAT} {ns!r} has no {self.META} under {self.root} "
+            f"— run build() first"))
 
     def _write_meta(self, ns: str, doc: dict) -> None:
         import json
 
-        self.fs.write_text_atomic(
-            f"{self._ns_dir(ns)}/{self.META}", json.dumps(doc))
+        self.fs.write_text_atomic(self._meta_path(ns), json.dumps(doc))
 
     def _commit_meta(self, ns: str, doc: dict) -> None:
-        """CAS-fenced meta flip (VERDICT r12 #4, the store's
-        ``_write_meta_cas`` pattern): maintenance verbs on one index
-        are serial BY CONTRACT, and a second concurrent maintainer
-        used to silently lose the first's meta update.  Every verb
-        carries the ``txn`` it READ at entry into its commit;
+        """CAS-fenced meta flip (VERDICT r12 #4): maintenance verbs on
+        one index are serial BY CONTRACT, and a second concurrent
+        maintainer used to silently lose the first's meta update.
+        Every verb carries the ``txn`` it READ at entry in ``doc``;
         :func:`cas_commit_meta` re-checks it under the flip lock and
-        raises :class:`ConcurrentMaintainerError` on a mismatch.  The
-        lock serializes the re-check->write window itself; the txn CAS
-        is the backstop for interleavings wider than the window — a
-        verb's Spark jobs run for seconds between its entry read and
-        this commit."""
-        cas_commit_meta(self.fs, f"{self._ns_dir(ns)}/{self.META}",
-                        self._lock(ns), what=self._what(ns), doc=doc)
+        raises :class:`ConcurrentMaintainerError` on a mismatch."""
+        cas_commit_meta(self.fs, self._meta_path(ns), self._lock(ns),
+                        self._what(ns), doc, int(doc.get("txn", 0)))
 
     # ---------------------------------------------------------- swap
 
@@ -984,18 +1045,9 @@ class IndexKernel:
         ``entry_txn + 2``."""
         import json
 
-        with flip_lock(self.fs, self._lock(ns), what=self._what(ns)):
-            stored = self.meta(ns)
-            stored_txn = int(stored.get("txn", 0))
-            if stored_txn != entry_txn:
-                raise ConcurrentMaintainerError(
-                    f"{self._what(ns)}: meta txn advanced {entry_txn} "
-                    f"-> {stored_txn} during {self.ROLL_VERB} "
-                    f"(concurrent maintainer detected); re-run the "
-                    f"verb")
-            fence = dict(stored)
-            fence["txn"] = entry_txn + 1
-            self._write_meta(ns, fence)
+        with meta_fence(self.fs, self._meta_path(ns), self._lock(ns),
+                        self._what(ns), entry_txn) as stored:
+            self._write_meta(ns, {**stored, "txn": entry_txn + 1})
             self.fs.write_text_atomic(
                 f"{self._ns_dir(ns)}/{self.ROLL_MARKER}",
                 json.dumps(target))

@@ -327,8 +327,9 @@ class MutableKV:
             # precondition (see _Meta.kv_folded)
             m.kv_folded = True
 
-        self.store._rewrite_generation(self.ns, transform,
-                                       meta_update=_mark_folded)
+        self.store._rewrite_generation(
+            self.ns, self.store._read_meta(self.ns), transform,
+            meta_update=_mark_folded)
 
     #: Chain-debt sizing rule for :meth:`stats` / :meth:`maintain`
     #: (the store/ANN maintain convention): heal when a vacuum would
@@ -631,6 +632,13 @@ class MutableKV:
                 f"merge_into({self.ns!r}): app_id={app_id!r} requires "
                 f"a batch_id — the fence is keyed on (app_id, batch_id)")
         inherits_legacy = first_keyed = False
+        # The ONE meta read of this merge: every gate below (the
+        # fence, the steady-state fold skip, the layout gate, the
+        # prune set) comes from it, and the rewrite's flip CASes
+        # against its txn, so any append, rollover or merge that
+        # commits in between fails this merge's flip instead of
+        # passing it with stale gates.
+        meta0 = self.store._read_meta(self.ns)
         # Steady-state fold skip (r14, VERDICT r13 #6): when the live
         # generation is a prior merge/vacuum's output (every chain
         # exactly one non-tombstone row — _Meta.kv_folded), the fold
@@ -639,20 +647,9 @@ class MutableKV:
         # (_fold_stored_heads) and the associative path passes them
         # through JVM-side (_split_folded).  This is the dominant
         # term of the streaming MERGE case (stream_kv_merges: small
-        # per-batch updates against a large folded view).  The flag is
-        # read at entry under the serial-maintainer contract; any
-        # interleaved raw append clears it AND fails this merge's CAS
-        # flip, so the fast path can never skip a chain that grew
-        # mid-merge.
-        meta0 = (self.store._read_meta(self.ns)
-                 if self.store.is_registered(self.ns) else None)
-        folded_steady = meta0 is not None and meta0.kv_folded
+        # per-batch updates against a large folded view).
+        folded_steady = meta0.kv_folded
         if batch_id is not None:
-            if meta0 is None:
-                # unregistered + fenced: preserve the pre-r14 error
-                # path (one read otherwise — the flag and the fence
-                # must come from the SAME meta snapshot)
-                meta0 = self.store._read_meta(self.ns)
             if app_id is not None:
                 fence = meta0.merge_fences.get(app_id, -1)
                 # Upgrade-in-place seeding (ADVICE r12 #1): the FIRST
@@ -712,12 +709,10 @@ class MutableKV:
                     # checkpoint reset (the next lineage must NOT
                     # inherit): fold the seeded fence in-place under
                     # the CAS flip
-                    def _seed(m):
-                        m.merge_fences[app_id] = max(
-                            m.merge_fences.get(app_id, -1), int(fence))
-                        m.merge_fences_migrated = True
-
-                    self.store._update_meta(self.ns, _seed)
+                    meta0.merge_fences[app_id] = max(
+                        meta0.merge_fences.get(app_id, -1), int(fence))
+                    meta0.merge_fences_migrated = True
+                    self.store._write_meta_cas(self.ns, meta0)
                 return  # completed replay — fenced no-op
 
         def _fence(m):
@@ -769,7 +764,7 @@ class MutableKV:
             F.col("seq").cast("long").alias("seq"),
             F.lit(1).alias("__src"),
         )
-        idx = self.store.index(self.ns)
+        idx = meta0.index
 
         # Bucket-pruned incremental rewrite (r15, VERDICT r14 #3): in
         # the folded steady state every untouched chain is a single
@@ -790,7 +785,7 @@ class MutableKV:
         # the precondition for BOTH the bucket-pruned rewrite below
         # and the layout-keyed fold (guide §2.4) that lets the merge
         # write without a second exchange.
-        layout_const = (meta0 is not None and not meta0.dual
+        layout_const = (not meta0.dual
                         and len(meta0.index_for(1).entries) == 1)
         prune = None
         if folded_steady and layout_const:
@@ -863,7 +858,7 @@ class MutableKV:
                 part, (), fold_comb, "address long, payload binary")
 
         if batch_id is None and not self.store.fs.is_dir(
-                self.store._points_dir(self.ns)):
+                self.store._points_dir(self.ns, meta0)):
             # Degenerate empty-KV shortcut — UNFENCED calls only: the
             # fenced path must commit data and fence in ONE flip, so
             # it routes through _rewrite_generation(allow_missing)
@@ -986,7 +981,7 @@ class MutableKV:
                 return full
 
             self.store._rewrite_generation(
-                self.ns, transform_assoc, meta_update=_fence,
+                self.ns, meta0, transform_assoc, meta_update=_fence,
                 allow_missing=batch_id is not None,
                 prune_partitions=prune)
             return
@@ -1035,7 +1030,7 @@ class MutableKV:
             )
 
         self.store._rewrite_generation(
-            self.ns, transform, meta_update=_fence,
+            self.ns, meta0, transform, meta_update=_fence,
             allow_missing=batch_id is not None,
             prune_partitions=prune, pre_shaped=layout_const)
 

@@ -284,45 +284,9 @@ class TimeStore:
     # ------------------------------------------------------------- meta
 
     def _read_meta(self, ns: str) -> _Meta:
-        path = self._meta_path(ns)
-        # exists_or_recover restores _meta.json from its .bak crash
-        # backup if a write_text_atomic was interrupted mid-replace.
-        # The open itself can still race a concurrent writer's replace
-        # (primary briefly renamed aside between our exists check and
-        # the read) — that window is transient by construction, so a
-        # bounded re-check-and-retry is exact, not a sleep-and-hope.
-        import time
-
-        last_exc: Exception | None = None
-        for _ in range(20):
-            if not self.fs.exists_or_recover(path):
-                raise NamespaceNotRegistered(ns)
-            try:
-                return _Meta.from_json(json.loads(self.fs.read_text(path)))
-            except (ValueError, KeyError, TypeError) as exc:
-                # partial/half-replaced document (JSONDecodeError is a
-                # ValueError; from_json raises KeyError/TypeError on a
-                # truncated dict) — the transient the retry exists for
-                last_exc = exc
-            except FileNotFoundError as exc:
-                # the same vanished-primary transient surfaced by a
-                # PYTHON FS layer ('[Errno 2] ...' — no JVM class name
-                # in str, so the substring match below can't see it;
-                # ADVICE r8)
-                last_exc = exc
-            except Exception as exc:
-                # only a vanished primary is part of the replace
-                # window; permission errors, py4j failures and other
-                # genuine I/O problems must surface immediately with
-                # their root cause (ADVICE r7)
-                if "FileNotFoundException" not in str(exc):
-                    raise
-                last_exc = exc
-            time.sleep(0.01)
-        raise IOError(
-            f"namespace {ns!r}: _meta.json unreadable after 20 attempts "
-            f"(writer replace storm?)"
-        ) from last_exc
+        return fsutil.read_meta(self.fs, self._meta_path(ns),
+                                NamespaceNotRegistered(ns),
+                                parse=_Meta.from_json)
 
     def _write_meta(self, ns: str, meta: _Meta) -> None:
         self.fs.write_text_atomic(
@@ -332,87 +296,50 @@ class TimeStore:
     @contextmanager
     def _flip_lock(self, ns: str, timeout: float = 30.0,
                    stale_after: float = 60.0):
-        """Best-effort exclusive marker around the CAS read->write
-        window (the reference pairs its index CAS re-check with
-        advisory locks, StoreHelpers.hs:214-219 / TimeStore.hs:98-137).
-
-        Create-exclusive is atomic where the FS provides it
-        (``fsutil.HadoopFS.create_exclusive``: O_CREAT|O_EXCL for
-        local paths, namenode create for HDFS), so there the
-        undetected two-writers-in-the-window race is closed; on object
-        stores create-exclusive is only best-effort (S3 has no atomic
-        create-if-absent), which is why the txn CAS re-check stays —
-        the lock narrows the window, the CAS detects whatever slips
-        through.  A marker older than ``stale_after`` seconds is
-        treated as a crashed holder and broken via RENAME-then-delete
-        so only ONE waiter can win the break (r7 review finding: a
-        blind delete let two waiters each delete-and-recreate, putting
-        both inside the window).
-
-        Release verifies OWNERSHIP (r8 review finding): each acquire
-        writes a unique token (pid+thread+nonce — pid alone collides
-        across threads) and the finally only deletes the lock when the
-        stored content still matches.  Without the check, a holder that
-        stalls past ``stale_after`` (GC pause, slow py4j call) would,
-        on wake, delete the FRESH lock a legitimate stale-breaker had
-        since created, letting a third writer into the serialized
-        window.  The content write after the atomic create is itself
-        not atomic, but every mismatch direction is safe: a reader
-        that sees empty/partial content skips the delete (conservative
-        — the stale-break reclaims a crashed mid-acquire marker after
-        ``stale_after``, i.e. exactly the crashed-holder path), and a
-        partial read of one fixed-length token can never equal a
-        different full token.  The remaining read->delete instant is
-        the one unavoidable TOCTOU; it requires a second 60s stall
-        landing inside a microsecond window, vs the previous behavior
-        where ANY post-stall release was destructive.
-        """
-        # implementation shared with the persisted ANN indexes
-        # (fsutil.flip_lock — extracted in r13, VERDICT r12 #4)
+        """:func:`fsutil.flip_lock` on this namespace's meta document."""
         with fsutil.flip_lock(
-                self.fs, f"{self._ns_dir(ns)}/{_META}.lock",
+                self.fs, f"{self._meta_path(ns)}.lock",
                 what=f"namespace {ns!r}", timeout=timeout,
                 stale_after=stale_after,
                 err_cls=ConcurrentWriterError):
             yield
 
     def _write_meta_cas(self, ns: str, meta: _Meta) -> None:
-        """Fenced meta flip: re-read the stored document and fail on a
-        txn mismatch before writing (the reference's CAS re-check,
-        StoreHelpers.hs:214-219 — see :class:`ConcurrentWriterError`).
+        """Fenced meta flip (:func:`fsutil.cas_commit_meta`, see
+        :class:`ConcurrentWriterError`): ``meta`` must carry the
+        ``txn`` it was READ with; on success the stored and in-memory
+        ``txn`` advance together, so a multi-flip flow (write_points ->
+        _maybe_rollover) stays fenced across its own writes."""
+        fsutil.cas_commit_meta(
+            self.fs, self._meta_path(ns), f"{self._meta_path(ns)}.lock",
+            f"namespace {ns!r}", meta.to_json(), meta.txn,
+            err_cls=ConcurrentWriterError)
+        meta.txn += 1
 
-        ``meta`` must carry the ``txn`` it was READ with; on success
-        the stored and in-memory ``txn`` advance together, so a
-        multi-flip flow (write_points -> _maybe_rollover) stays fenced
-        across its own successive writes.  The re-check -> write window
-        itself is serialized by :meth:`_flip_lock` (atomic
-        create-exclusive on HDFS/local; best-effort on object stores),
-        so the detect-and-fail CAS is the backstop for interleavings
-        wider than the window — the realistic failure with multi-second
-        Spark jobs between read and flip — and for filesystems whose
-        create-exclusive is not atomic.
-        """
-        with self._flip_lock(ns):
-            stored = self._read_meta(ns)
-            if stored.txn != meta.txn:
-                raise ConcurrentWriterError(
-                    f"namespace {ns!r}: _meta.json txn advanced "
-                    f"{meta.txn} -> {stored.txn} since this writer read "
-                    f"it (concurrent writer detected); re-read and retry"
-                )
-            meta.txn += 1
-            self._write_meta(ns, meta)
+    def _commit_retrying(self, ns: str, meta: _Meta, apply,
+                         retries: int) -> _Meta:
+        """Run ``apply(meta)`` and CAS-commit ``meta``.  A lost flip
+        backs off, re-reads, and re-runs ``apply`` on the fresh
+        document, at most ``retries`` times (the reference's
+        re-fetch-index-and-re-check, StoreHelpers.hs:214-219).
+        ``apply`` returns False when nothing is left to commit (a
+        concurrent writer's change supersedes this one) and raises
+        :class:`ConcurrentWriterError` when the fold would be unsound.
+        Returns the committed (or superseding) document."""
+        import random
+        import time
 
-    def _update_meta(self, ns: str, fn) -> None:
-        """Fenced metadata-only update: read, apply ``fn(meta)``
-        in-place, CAS-flip.  For bookkeeping folds with no
-        accompanying data rewrite (e.g. the one-shot merge-fence
-        migration seed, mutable.py) — a concurrent writer interleaving
-        the read->flip window surfaces as ConcurrentWriterError, and
-        the caller (a streaming micro-batch, typically) retries."""
-        meta = self._read_meta(ns)
-        fn(meta)
-        self._write_meta_cas(ns, meta)
+        for attempt in range(retries + 1):
+            if not apply(meta):
+                return meta
+            try:
+                self._write_meta_cas(ns, meta)
+                return meta
+            except ConcurrentWriterError:
+                if attempt == retries:
+                    raise
+                time.sleep(random.uniform(0.01, 0.05 * (attempt + 1)))
+                meta = self._read_meta(ns)
 
     # -------------------------------------------------------------- DDL
 
@@ -596,53 +523,39 @@ class TimeStore:
             self.fs.delete(stage, recursive=True)
 
         got = obs.get
-        for attempt in range(retries + 1):
-            meta.latest_simple = _mono_max(
-                meta.latest_simple, got["max_simple"])
-            meta.latest_extended = _mono_max(
-                meta.latest_extended, got["max_extended"])
+        entry = meta
+
+        def fold(m: _Meta) -> bool:
+            if (m.index.entries != entry.index.entries
+                    or m.index_extended != entry.index_extended
+                    # an expire between our file write and this flip
+                    # may have dropped our just-committed files, so a
+                    # fold would record watermarks for vanished data
+                    # (r8 review)
+                    or m.expire_gen != entry.expire_gen
+                    # a generation rewrite (compact/vacuum/merge_into)
+                    # flipped after our promote: our files went into
+                    # the OLD generation dir, which the winner deleted
+                    # (r15 review — silent data loss)
+                    or m.points_version != entry.points_version):
+                # placement was routed under a stale index, or our
+                # rows are gone: the caller re-runs the batch
+                raise ConcurrentWriterError(
+                    f"namespace {ns!r}: a concurrent writer changed the "
+                    f"index, expired epochs or swapped the generation "
+                    f"under this batch; re-run it")
+            m.latest_simple = _mono_max(m.latest_simple, got["max_simple"])
+            m.latest_extended = _mono_max(
+                m.latest_extended, got["max_extended"])
             if got["max_seq"] is not None:
-                meta.seq_base = max(meta.seq_base, int(got["max_seq"]) + 1)
+                m.seq_base = max(m.seq_base, int(got["max_seq"]) + 1)
             # any raw append can grow a chain past one row, so the KV
             # merge fast path's steady-state marker no longer holds
             # (see _Meta.kv_folded)
-            meta.kv_folded = False
-            try:
-                self._write_meta_cas(ns, meta)
-                break
-            except ConcurrentWriterError:
-                if attempt == retries:
-                    raise
-                import random
-                import time
+            m.kv_folded = False
+            return True
 
-                time.sleep(random.uniform(0.01, 0.05 * (attempt + 1)))
-                fresh = self._read_meta(ns)
-                if (fresh.index.entries != meta.index.entries
-                        or fresh.index_extended != meta.index_extended):
-                    # Placement was routed under a stale index — a flip
-                    # merge would strand rows behind the new epoch cut.
-                    raise
-                if fresh.expire_gen != meta.expire_gen:
-                    # An expire ran between our file write and this
-                    # flip: our just-committed files may be among the
-                    # dropped partitions, so a merge-fold would record
-                    # watermarks for vanished data.  Refuse — the
-                    # caller re-runs the batch, rewriting the files
-                    # (r8 review finding).
-                    raise
-                if fresh.points_version != meta.points_version:
-                    # A generation rewrite (compact/vacuum/merge_into)
-                    # flipped between our promote and this CAS: our
-                    # files went into the OLD generation dir, which the
-                    # winner deleted after its flip.  Folding our
-                    # watermarks into the fresh doc would commit a
-                    # batch whose rows no longer exist (r15 review —
-                    # silent data loss).  Refuse; the caller re-runs
-                    # the batch against the live generation.
-                    raise
-                meta = fresh  # re-fold our maxima into the fresh doc
-
+        meta = self._commit_retrying(ns, meta, fold, retries)
         self._maybe_rollover(ns, meta, retries=retries)
 
     def _maybe_rollover(self, ns: str, meta: _Meta,
@@ -685,30 +598,17 @@ class TimeStore:
         # (splitRemainder's exact-boundary back-off, Index.hs:80-88) —
         # otherwise range_lookup(start == watermark) would prune to the
         # new (empty) epoch and silently drop them.
-        new_entries = meta.index.entries + ((watermark + 1, buckets),)
-        for attempt in range(retries + 1):
-            meta.index = Index(new_entries)
-            try:
-                self._write_meta_cas(ns, meta)
-                return
-            except ConcurrentWriterError:
-                if attempt == retries:
-                    raise
-                import random
-                import time
 
-                time.sleep(random.uniform(0.01, 0.05 * (attempt + 1)))
-                fresh = self._read_meta(ns)
-                if fresh.index.latest()[0] > latest_epoch:
-                    return  # another writer's cut supersedes ours
-                meta = fresh
-                # Re-derive the boundary from the FRESH watermarks: the
-                # interleaving writer may have advanced them, and the
-                # new epoch must start strictly after every point seen.
-                watermark = max(
-                    meta.latest_simple or 0, meta.latest_extended or 0
-                )
-                new_entries = meta.index.entries + ((watermark + 1, buckets),)
+        def cut(m: _Meta) -> bool:
+            if m.index.latest()[0] > latest_epoch:
+                return False  # another writer's cut supersedes ours
+            # the boundary comes from THIS document's watermarks: an
+            # interleaving writer may have advanced them
+            wm = max(m.latest_simple or 0, m.latest_extended or 0)
+            m.index = Index(m.index.entries + ((wm + 1, buckets),))
+            return True
+
+        self._commit_retrying(ns, meta, cut, retries)
 
     def _maybe_rollover_dual(self, ns: str, meta: _Meta,
                              retries: int = 0) -> None:
@@ -741,30 +641,18 @@ class TimeStore:
             # unified cut (Index.hs:80-88)
             return Index(idx.entries + ((wm + 1, buckets),))
 
-        for attempt in range(retries + 1):
-            new_s = cut_for(meta.index, meta.latest_simple, 0)
-            new_x = cut_for(meta.index_extended, meta.latest_extended, 1)
-            if new_s is None and new_x is None:
-                return
+        def cut(m: _Meta) -> bool:
+            # a superseding writer's cut empties the probe (its new
+            # latest epoch has no over-threshold dir yet)
+            new_s = cut_for(m.index, m.latest_simple, 0)
+            new_x = cut_for(m.index_extended, m.latest_extended, 1)
             if new_s is not None:
-                meta.index = new_s
+                m.index = new_s
             if new_x is not None:
-                meta.index_extended = new_x
-            try:
-                self._write_meta_cas(ns, meta)
-                return
-            except ConcurrentWriterError:
-                if attempt == retries:
-                    raise
-                import random
-                import time
+                m.index_extended = new_x
+            return new_s is not None or new_x is not None
 
-                time.sleep(random.uniform(0.01, 0.05 * (attempt + 1)))
-                # Re-derive both cuts from the fresh document: a
-                # superseding writer's cut empties the probe (its new
-                # latest epoch has no over-threshold dir yet) and the
-                # corresponding cut_for simply returns None.
-                meta = self._read_meta(ns)
+        self._commit_retrying(ns, meta, cut, retries)
 
     def write_points_batched(self, ns: str, df: DataFrame,
                              batch_col: str,
@@ -1471,9 +1359,10 @@ class TimeStore:
         else:
             transform = None
         self._rewrite_generation(
-            ns, transform, target_partitions_per_bucket, sort_within)
+            ns, self._read_meta(ns), transform,
+            target_partitions_per_bucket, sort_within)
 
-    def _rewrite_generation(self, ns: str, transform,
+    def _rewrite_generation(self, ns: str, meta: _Meta, transform,
                             target_partitions_per_bucket: int = 1,
                             sort_within: Sequence[str] | None = (
                                 "address", "time"),
@@ -1491,6 +1380,10 @@ class TimeStore:
         stays live (the new dir is a gc-able orphan); after it, only
         the old dir remains to delete.
 
+        ``meta`` is the caller's ENTRY read: the flip CASes against its
+        txn, so every gate the caller computed from it (merge_into's
+        fold skip, layout gate and prune set) is fenced with it.
+
         ``prune_partitions`` (r15, VERDICT r14 #3 — the incremental
         rewrite): an explicit list of ``(epoch, bucket)`` pairs that
         are the ONLY partitions ``transform`` reads or emits.  The
@@ -1507,7 +1400,9 @@ class TimeStore:
         not-yet-live ``points_v{v+1}`` orphan the write does, and the
         flip/delete sequence is identical.  Only plain
         ``(epoch, bucket)`` layouts qualify; dual-index (``kind``-led)
-        layouts fall back to the full rewrite.
+        layouts fall back to the full rewrite.  A write that lands a
+        row outside the set (a non-deterministic source evaluated
+        twice) deletes the new dir and raises before the flip.
 
         ``pre_shaped`` (r15, guide §2.4): the caller certifies that
         every (epoch, bucket) of its transform output lies wholly in
@@ -1524,7 +1419,6 @@ class TimeStore:
 
         from rados_timestore_spark.core import kind_col
 
-        meta = self._read_meta(ns)
         pdir = self._points_dir(ns, meta)
         if prune_partitions is not None and meta.part_cols() != (
                 "epoch", "bucket"):
@@ -1566,22 +1460,39 @@ class TimeStore:
         # observed below the exchange, a transform that drains to zero
         # rows leaves the metrics row schemaless and obs.get throws
         # (Spark 4.1 toPyRow assertion — found by the KV fuzz).
-        obs = Observation()
-        out = out.observe(
-            obs,
+        aggs = [
             F.count(F.lit(1)).alias("n_rows"),
             F.max(F.when(kind_col("address") == 0, F.col("time")))
             .alias("max_simple"),
             F.max(F.when(kind_col("address") == 1, F.col("time")))
             .alias("max_extended"),
             F.max("seq").alias("max_seq"),
-        )
+        ]
+        if by_epoch is not None:
+            inside = F.lit(False)
+            for e, bs in by_epoch.items():
+                inside = inside | ((F.col("epoch") == e)
+                                   & F.col("bucket").isin(sorted(bs)))
+            aggs.append(F.count(F.when(~F.coalesce(inside, F.lit(False)),
+                                       1)).alias("n_outside"))
+        obs = Observation()
+        out = out.observe(obs, *aggs)
         (
             out.write.mode("overwrite").partitionBy(*pcols)
             .parquet(new_dir)
         )
+        got = obs.get  # cached after the write action; no extra job
         cloned = 0
-        if prune_partitions is not None:
+        if by_epoch is not None:
+            if got["n_outside"]:
+                self.fs.delete(new_dir, recursive=True)
+                raise ValueError(
+                    f"namespace {ns!r}: the pruned rewrite wrote "
+                    f"{got['n_outside']} rows outside its "
+                    f"{len(prune_partitions)} pruned partitions — its "
+                    f"input changed between evaluations (cache or "
+                    f"checkpoint a non-deterministic source); nothing "
+                    f"was committed")
             # Carry the untouched partitions of the old generation
             # into the new one at metadata rate (see the docstring).
             # This happens BEFORE the flip, so a crash mid-clone
@@ -1612,7 +1523,7 @@ class TimeStore:
                     cloned += self.fs.clone_dir_tree(
                         f"{pdir}/{ename}/{bname}",
                         f"{new_dir}/{ename}/{bname}")
-        if int(obs.get["n_rows"] or 0) == 0 and cloned == 0:
+        if int(got["n_rows"] or 0) == 0 and cloned == 0:
             # The transform drained the generation (e.g. vacuum of a
             # fully-tombstoned KV).  A zero-file parquet dir is
             # unreadable (UNABLE_TO_INFER_SCHEMA — found by the KV
@@ -1625,7 +1536,6 @@ class TimeStore:
         # a crash after it leaves only the old dir to GC.  The
         # watermark fold rides the SAME CAS flip so no window exists
         # where the new generation is live under stale watermarks.
-        got = obs.get  # cached after the write action; no extra job
         meta.latest_simple = _mono_max(meta.latest_simple,
                                        got["max_simple"])
         meta.latest_extended = _mono_max(meta.latest_extended,
@@ -1807,8 +1717,8 @@ class TimeStore:
         Also sweeps crashed FILE remnants (r11): ``*.tmp.*`` from a
         writer killed inside ``write_text_atomic`` before its rename,
         and ``*.lock.stale.*`` tombs from a stale-breaker killed
-        between its rename and delete (see :meth:`_flip_lock`).  Both
-        are dead by construction — the tmp was never promoted (its
+        between its rename and delete (see :func:`fsutil.flip_lock`).
+        Both are dead by construction — the tmp was never promoted (its
         writer is gone) and a stale tomb is the moved-aside corpse of
         an already-broken lock — but they accumulate listing overhead
         forever without a sweeper.  ``.bak`` files are NOT swept:

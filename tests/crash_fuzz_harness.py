@@ -5,8 +5,10 @@ The r10/r11 ADVICE crash bugs were all of one shape: a process dying
 between two metadata-FS mutations (the shard/bucket/dir swap windows)
 left a state some later verb misread.  The targeted regression tests
 pin each KNOWN window; this harness generalizes them: every index FS
-mutation (rename / delete / mkdirs / write_text_atomic) is a kill
-point, and for each one we
+mutation (rename / delete / mkdirs / create_exclusive /
+write_text_atomic, and each rename and delete INSIDE
+write_text_atomic's tmp+backup replace) is a kill point, and for each
+one we
 
   1. run the verb script until the countdown kills it there
      (:class:`SimulatedCrash` — the fsutil fault-injection exception),
@@ -46,7 +48,11 @@ class CountdownFS:
     the mutating call once ``fuel`` prior mutations have run.
     ``fuel=None`` counts without killing (the dry run).  ``paths``
     records the first argument (the path) of each mutation that ran,
-    so ``paths[i]`` is what boundary ``fuel=i`` kills before."""
+    so ``paths[i]`` is what boundary ``fuel=i`` kills before.  A
+    composite verb (a whole ``write_text_atomic``) is ONE boundary
+    here: the targeted window tests pin their fuels in this unit,
+    while the sweeps kill inside composites too
+    (:func:`countdown_fs_class`)."""
 
     def __init__(self, inner, fuel: int | None = None):
         self.inner = inner
@@ -71,13 +77,16 @@ class CountdownFS:
 
 def countdown_fs_class():
     """A HadoopFS SUBCLASS whose mutators count and kill — for
-    TimeStore, whose composite FS verbs (``promote_dir_tree``,
+    TimeStore and the indexes, whose composite FS verbs (``promote_dir_tree``,
     ``sweep_files``, ``write_text_atomic``'s tmp+backup dance)
     dispatch their inner renames/deletes through ``self``: a proxy in
     front of the object would count the composite as ONE boundary,
     the subclass kills INSIDE it — the half-promoted-batch and
     mid-meta-swap windows are exactly the interesting ones.  Pass as
-    ``TimeStore(..., fs_class=...)`` and set ``store.fs.fuel``.
+    ``TimeStore(..., fs_class=...)`` and set ``store.fs.fuel``; an
+    index takes an instance as its ``fs`` (:func:`countdown_index`).
+    ``paths`` records the argument of each mutation that ran, so
+    ``paths[i]`` is what ``fuel=i`` kills before.
 
     A kill leaves the instance's fuel exhausted, so every later FS
     call in the same verb (except-handlers, finallys) also dies —
@@ -91,12 +100,14 @@ def countdown_fs_class():
             super().__init__(spark, root)
             self.fuel = None
             self.ops = 0
+            self.paths: list[str] = []
 
         def _tick(self, name, arg):
             if self.fuel is not None and self.ops >= self.fuel:
                 raise SimulatedCrash(
                     f"killed before {name} #{self.ops}: {arg}")
             self.ops += 1
+            self.paths.append(str(arg))
 
         def mkdirs(self, p):
             self._tick("mkdirs", p)
@@ -121,21 +132,30 @@ def countdown_fs_class():
     return _CountdownHadoopFS
 
 
+def countdown_index(ix, fuel: int | None = None):
+    """Give index ``ix`` a :func:`countdown_fs_class` FS on its root
+    with ``fuel`` (None = count without killing); returns it."""
+    fs = countdown_fs_class()(ix.spark, ix.root)
+    fs.fuel = fuel
+    ix.fs = fs
+    return fs
+
+
 def dry_run(make_index, template_root: str, script,
             paths: list | None = None) -> tuple[int, object]:
     """Run ``script`` fault-free against a COPY of the template index,
     counting FS mutations.  Returns (total_mutations, root_of_final_state);
     ``paths``, when given, is extended with each mutation's path (see
-    :class:`CountdownFS`).
+    :func:`countdown_fs_class`).
     """
     final_root = template_root + ".final"
     shutil.copytree(template_root, final_root)
     ix = make_index(final_root)
-    ix.fs = CountdownFS(ix.fs)
+    fs = countdown_index(ix)
     script(ix)
     if paths is not None:
-        paths.extend(ix.fs.paths)
-    return ix.fs.ops, final_root
+        paths.extend(fs.paths)
+    return fs.ops, final_root
 
 
 def crash_at(make_index, template_root: str, script, fuel: int,
@@ -146,7 +166,7 @@ def crash_at(make_index, template_root: str, script, fuel: int,
     shutil.rmtree(work_root, ignore_errors=True)
     shutil.copytree(template_root, work_root)
     ix = make_index(work_root)
-    ix.fs = CountdownFS(ix.fs, fuel=fuel)
+    countdown_index(ix, fuel)
     try:
         script(ix)
     except SimulatedCrash:

@@ -3,10 +3,15 @@
 The reference coordinates many writer daemons with advisory locks plus
 a CAS re-check of the index object, stress-tested as 100 concurrent
 exclusive-lock counter increments (tests/StoreTests.hs:128-157: final
-counter must be exactly 100 — no lost update).  This port pairs the
-``_Meta.txn`` CAS with a create-exclusive flip lock
-(``TimeStore._flip_lock``) and bounded re-read-and-retry; these tests
-pin the same no-lost-update law on the Spark engine.
+counter must be exactly 100 — no lost update).  This port has one
+commit for every meta document, the store's ``_meta.json`` and both
+ANN indexes' metas: ``fsutil.cas_commit_meta`` re-checks the txn the
+verb read at entry under a create-exclusive flip lock
+(``fsutil.flip_lock``), and callers re-read and retry.  These tests
+pin the same no-lost-update law on the Spark engine: the counter test
+over both document shapes (8 writers in the default run, 100 in the
+slow set), the lock's exclusion, stale-break and ownership rules, and
+interleaved ``write_points`` writers with retries.
 """
 
 import threading
@@ -22,32 +27,63 @@ def _write(store, ns, rows, **kw):
     store.write_points(ns, df, **kw)
 
 
-@pytest.mark.slow  # soak/fuzz: excluded from the default run (see pytest.ini)
-def test_meta_cas_counter_100_writers(store):
+def _counter_doc(shape, spark, root):
+    """``(read, commit, count, err_cls)`` over one meta document of
+    ``shape``: the store's ``_meta.json`` (``seq_base`` plays the
+    counter) or an index kernel's (a ``n`` field)."""
+    if shape == "store":
+        store = TimeStore(spark, root)
+        store.register_namespace("ctr", buckets=4)
+
+        def commit(meta):
+            meta.seq_base += 1
+            store._write_meta_cas("ctr", meta)
+
+        return (lambda: store._read_meta("ctr"), commit,
+                lambda: store._read_meta("ctr").seq_base,
+                ConcurrentWriterError)
+    from rados_timestore_spark.fsutil import ConcurrentMaintainerError
+    from rados_timestore_spark.vector_index import VectorIndex
+
+    ix = VectorIndex(spark, root)
+    ix._write_meta("ctr", {"n": 0, "txn": 0})
+
+    def commit(doc):
+        doc["n"] += 1
+        ix._commit_meta("ctr", doc)
+
+    return (lambda: ix.meta("ctr"), commit,
+            lambda: ix.meta("ctr")["n"], ConcurrentMaintainerError)
+
+
+@pytest.mark.parametrize("n_writers", [
+    8, pytest.param(100, marks=pytest.mark.slow)])
+@pytest.mark.parametrize("shape", ["store", "index"])
+def test_meta_cas_counter_100_writers(spark, tmp_path, shape, n_writers):
     # StoreTests.hs:128-157 ported: 100 writers each read the shared
     # document, dally, and write back an increment through the fenced
-    # flip.  seq_base plays the counter.  Every writer retries its OWN
-    # read-modify-write on CAS failure (the reference re-acquires the
-    # lock per attempt), so the final count proves no update was lost
-    # in any interleaving.
-    store.register_namespace("ctr", buckets=4)
-    n_writers, errors = 100, []
+    # flip, for both document shapes that share the one CAS commit.
+    # Every writer retries its OWN read-modify-write on CAS failure
+    # (the reference re-acquires the lock per attempt), so the final
+    # count proves no update was lost in any interleaving.  The
+    # 8-writer run is the default-run smoke.
+    read, commit, count, err_cls = _counter_doc(
+        shape, spark, str(tmp_path / "warehouse"))
+    errors = []
 
     def incr():
         try:
             for _ in range(200):  # bounded retry per writer
-                meta = store._read_meta("ctr")
-                meta.seq_base += 1
                 try:
-                    store._write_meta_cas("ctr", meta)
+                    commit(read())
                     return
-                except ConcurrentWriterError:
+                except err_cls:
                     continue
             errors.append("retries exhausted")
         except Exception as exc:  # pragma: no cover
             errors.append(repr(exc))
 
-    # 100 logical writers on a bounded pool: the reference's 100 are
+    # the writers run on a bounded pool: the reference's 100 are
     # green threads on one capability; raw OS threads here would fan
     # out 100 concurrent py4j connections and measure the gateway, not
     # the lock.
@@ -56,7 +92,7 @@ def test_meta_cas_counter_100_writers(store):
     with ThreadPoolExecutor(max_workers=16) as pool:
         list(pool.map(lambda _: incr(), range(n_writers)))
     assert errors == []
-    assert store._read_meta("ctr").seq_base == n_writers
+    assert count() == n_writers
 
 
 def test_flip_lock_serializes_check_then_write(store):

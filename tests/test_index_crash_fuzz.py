@@ -156,11 +156,12 @@ def _converges(case, fuels, tmp_path, allowed=()):
 
 def _after_marker(marker: str):
     """The first boundary after the relayout's roll-forward marker is
-    written: the kill lands inside the roll-forward window, so the
-    replay's entry restore must complete the relayout."""
+    promoted (the rename of its tmp file): the kill lands inside the
+    roll-forward window, so the replay's entry restore must complete
+    the relayout."""
     def pick(paths):
         return [next(i for i, p in enumerate(paths)
-                     if p.endswith(f"/{marker}")) + 1]
+                     if f"/{marker}.tmp." in p) + 1]
     return pick
 
 
@@ -194,6 +195,50 @@ def test_vecidx_crash_fuzz_smoke(spark, tmp_path):
     _converges(_ivf_case(spark, tmp_path),
                _after_marker("_retrain.json"), tmp_path,
                allowed=(VectorIndexNotBuilt,))
+
+
+def test_vecidx_meta_replace_kill_serves_backup(spark, tmp_path):
+    # A kill between write_text_atomic's backup rename and its promote
+    # leaves only _vidx_meta.json.bak.  The meta reader restores it:
+    # the cold probe serves the pre-commit index (the enable_pq swaps
+    # re-encode codes only, so raw probes are unchanged, and the meta
+    # has no pq block yet), and a replay converges.
+    import glob
+    import os
+
+    from rados_timestore_spark.vector_index import VectorIndex
+
+    qs = [(qid, list(map(float, v))) for qid, v in _queries(spark)]
+
+    def make(root):
+        return VectorIndex(spark, root)
+
+    def verb(ix):
+        ix.enable_pq("e", m=4, ksub=16)
+
+    def probe(ix):
+        raw = tuple((r.query_id, r.neighbor_id) for r in
+                    ix.probe("e", qs, nprobe=2, topk=5)
+                    .orderBy("query_id", "rank").collect())
+        return ix.meta("e"), raw
+
+    tmpl = str(tmp_path / "tmpl")
+    make(tmpl).build("e", _emb(spark, 120), k=4)
+    before = probe(make(tmpl))
+    paths: list[str] = []
+    _total, final_root = dry_run(make, tmpl, verb, paths)
+    want = probe(make(final_root))
+    assert "pq" in want[0] and "pq" not in before[0]
+    fuel = next(i for i, p in enumerate(paths)
+                if "/e/_vidx_meta.json.tmp." in p)
+    work = crash_at(make, tmpl, verb, fuel, str(tmp_path / "k"))
+    live = f"{work}/e/_vidx_meta.json"
+    assert not os.path.exists(live) and os.path.exists(f"{live}.bak")
+    for lk in glob.glob(f"{work}/**/*.lock", recursive=True):
+        os.remove(lk)  # the killed commit's flip lock (see harness)
+    assert probe(make(work)) == before
+    verb(make(work))
+    assert probe(make(work)) == want
 
 
 def test_vecidx_delete_everything_lifecycle(spark, tmp_path):

@@ -13,6 +13,7 @@ import glob
 import random
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from rados_timestore_spark.mutable import (
@@ -99,6 +100,97 @@ def test_steady_merge_on_a_rescaled_kv_matches_model(spark, tmp_path):
     assert rep["ok"], rep
     assert {r.key: bytes(r.value)
             for r in kv.enumerate().collect()} == model
+
+
+def _small_folded_kv(spark, root):
+    """Keys 0, 2, 4, 6 (buckets 0, 2, 4, 6) holding ``raw``, folded by
+    one merge of key 0."""
+    kv = MutableKV(TimeStore(spark, root), "kv")
+    kv.insert_bulk(spark.createDataFrame(
+        [(k, bytearray(b"raw")) for k in (0, 2, 4, 6)],
+        "key long, value binary"))
+    kv.merge_into(_batch(spark, [0], "a"), _mrg)
+    assert kv.store._read_meta(kv.ns).kv_folded
+    return kv
+
+
+def _view_agrees(kv):
+    """The folded and argmax reads serve one value per key (enumerate
+    reports a key as its address, ``key | 1``)."""
+    view = {r.key: bytes(r.value) for r in kv.enumerate().collect()}
+    assert {k: kv.lookup(k) for k in view} == view
+    return view
+
+
+def test_merge_into_is_fenced_from_its_entry_read(spark, tmp_path):
+    # A raw insert that commits after the merge's one meta read (here:
+    # while the rewrite starts) clears kv_folded and grows key 6's
+    # chain in a bucket the pruned merge would clone as folded.  The
+    # merge's flip must fail against its entry txn, not commit
+    # kv_folded=True over the two-row chain.
+    from rados_timestore_spark.store import ConcurrentWriterError
+
+    root = str(tmp_path / "wh")
+    kv = _small_folded_kv(spark, root)
+    other = MutableKV(TimeStore(spark, root), "kv")
+    store = kv.store
+    real_rewrite, real_read = store._rewrite_generation, store._read_meta
+    reads = []
+
+    def rewrite(*args, **kw):
+        other.insert(6, b"v6")
+        return real_rewrite(*args, **kw)
+
+    def read(ns):
+        reads.append(ns)
+        return real_read(ns)
+
+    store._rewrite_generation, store._read_meta = rewrite, read
+    try:
+        with pytest.raises(ConcurrentWriterError):
+            kv.merge_into(_batch(spark, [0], "b"), _mrg)
+    finally:
+        del store._rewrite_generation, store._read_meta
+    assert reads == [kv.ns]  # one read before the CAS re-check
+    assert not store._read_meta(kv.ns).kv_folded
+    assert _view_agrees(kv) == {1: b"raw|a0", 3: b"raw", 5: b"raw",
+                                7: b"v6"}
+
+
+def test_pruned_merge_refuses_rows_outside_its_prune_set(spark, tmp_path):
+    # The prune set comes from one evaluation of ``updates`` and the
+    # fold from another; a source whose second evaluation adds key 6
+    # (bucket 6, outside the set) would write its merged head beside
+    # the clone of bucket 6: a duplicate chain under kv_folded=True.
+    root = str(tmp_path / "wh")
+    kv = _small_folded_kv(spark, root)
+    before = _view_agrees(kv)
+    meta0 = kv.store._read_meta(kv.ns)
+    dirs0 = sorted(glob.glob(f"{kv.store._ns_dir(kv.ns)}/points*"))
+    flag = str(tmp_path / "evaluated")
+
+    def source(batches):
+        import os
+
+        for _ in batches:
+            pass
+        keys = [0]
+        try:
+            os.close(os.open(flag, os.O_CREAT | os.O_EXCL))
+        except FileExistsError:
+            keys = [0, 6]  # every evaluation after the first
+        yield pd.DataFrame({"key": keys, "value": [b"x"] * len(keys),
+                            "seq": range(len(keys))})
+
+    updates = spark.range(1, numPartitions=1).mapInPandas(
+        source, "key long, value binary, seq long")
+    with pytest.raises(ValueError, match="outside its 1 pruned"):
+        kv.merge_into(updates, _mrg)
+    assert _view_agrees(kv) == before
+    meta = kv.store._read_meta(kv.ns)
+    assert (meta.txn, meta.kv_folded) == (meta0.txn, True)
+    assert sorted(glob.glob(
+        f"{kv.store._ns_dir(kv.ns)}/points*")) == dirs0
 
 
 def _random_chains(rng):

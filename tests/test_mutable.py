@@ -4,7 +4,7 @@ propMutableStore law (tests/FuzzyTests.hs:122-147)."""
 import pytest
 import random
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from rados_timestore_spark.mutable import MutableKV
@@ -411,6 +411,27 @@ _OP = st.one_of(
 @pytest.mark.slow  # soak/fuzz: excluded from the default run (see pytest.ini)
 @given(ops=st.lists(_OP, min_size=1, max_size=6))
 def test_mutable_kv_differential_fuzz(spark, tmp_path_factory, ops):
+    _kv_differential(spark, tmp_path_factory, ops)
+
+
+@settings(
+    max_examples=1, deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@example(ops=[("bulk", [(0, b"a"), (2, b"b"), (4, b"c")]),
+              ("merge_into", [(0, b"c"), (6, b"a")]),
+              ("merge_into", [(2, b"b")]),
+              ("insert_with", 2, b"c"), ("delete", 4),
+              ("vacuum_merge",)])
+@given(ops=st.lists(_OP, min_size=1, max_size=6))
+def test_mutable_kv_differential_fuzz_smoke(spark, tmp_path_factory, ops):
+    # default-run twin of the fuzz above: one drawn program, plus one
+    # that folds raw chains with merge_into, runs a steady (pruned)
+    # merge on the folded view, appends raw over it and vacuums
+    _kv_differential(spark, tmp_path_factory, ops)
+
+
+def _kv_differential(spark, tmp_path_factory, ops):
     # Every public mutation in one random program, engine vs the
     # value-sequence model; observables (enumerate, merge_with,
     # lookup) must agree after the full program.  The merge is

@@ -3,8 +3,9 @@ vector indexes — the full sweep behind the strided pytest subset
 (tests/test_index_crash_fuzz.py; harness + rationale in
 tests/crash_fuzz_harness.py).
 
-For every FS mutation the verb script performs (HNSW ~36, IVF ~45),
-kill there, reopen cold, replay the whole script, and assert the
+For every FS mutation the verb script performs, each rename and
+delete inside a meta document's tmp+backup replace included, kill
+there, reopen cold, replay the whole script, and assert the
 final state (meta counters + vector-id set + probe results) equals
 the no-crash run.  Run per round; outcome recorded in BENCH_NOTES.md.
 
